@@ -8,7 +8,7 @@ Public surface, one import away:
 
 Everything else lives in the named submodules: operators/ (filters),
 sources/ + sinks/ (inputs/outputs), streaming/ (jobs, stateful ops),
-plans/ (LSCL compiler, pipeline DAG, skew/bucketing helpers),
+plans/ (LSCL compiler, pipeline DAG, bucketing helpers),
 datahub/ (training-data ops), functions/ (conditions, sprintf, fieldref,
 decorators).
 

@@ -22,8 +22,8 @@ groupBy, watermark-compatible joins).
 
 Scale notes: all aggregations here are partial-aggregate friendly
 (count/sum/min/max), so map-side combine halves the shuffle; the join keys
-are (conv_id) which we salt upstream for hot conversations (see
-plans/skew.py).
+are (conv_id), and hot conversations are left to AQE skew-join splitting
+(session.py).
 """
 
 from __future__ import annotations

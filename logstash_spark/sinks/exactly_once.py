@@ -62,9 +62,12 @@ class ExactlyOnceParquetSink:
             if f.endswith(".json")
         }
 
+    def _marker(self, epoch_id: int) -> str:
+        return os.path.join(self.commits_dir, f"{epoch_id}.json")
+
     def _commit(self, epoch_id: int, meta: dict) -> None:
         tmp = os.path.join(self.commits_dir, f".{epoch_id}.json.tmp")
-        dst = os.path.join(self.commits_dir, f"{epoch_id}.json")
+        dst = self._marker(epoch_id)
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, dst)  # atomic: marker exists fully or not at all
@@ -73,7 +76,7 @@ class ExactlyOnceParquetSink:
 
     def handle(self, df: DataFrame, epoch_id: int) -> None:
         """foreachBatch body: idempotent per epoch_id."""
-        if epoch_id in self.committed_ids():
+        if os.path.exists(self._marker(epoch_id)):
             return  # replayed epoch: already durable, skip (exactly-once)
         from logstash_spark.functions.decorators import strip_metadata
 

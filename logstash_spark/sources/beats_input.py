@@ -210,6 +210,10 @@ def lumberjack_send(host: str, port: int, events: list[dict],
             raise ConnectionError(f"beats: expected ACK, got {hdr!r}")
         buf = b""
         while len(buf) < 4:
-            buf += s.recv(4 - len(buf))
+            chunk = s.recv(4 - len(buf))
+            if not chunk:
+                raise ConnectionError(
+                    f"beats: peer closed mid-ACK after {len(buf)} of 4 bytes")
+            buf += chunk
         (acked,) = struct.unpack(">I", buf)
         return acked

@@ -197,6 +197,17 @@ def _segmented_cumsum(values, sizes):
     return csum - seg_base
 
 
+# the checkout this package lives in: generated fixtures go to <root>/data
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def default_data_root() -> str:
+    """Where generated fixtures are cached: ``$LOGSTASH_SPARK_DATA`` if set,
+    else ``data/`` at the root of the checkout this package was imported
+    from (so a copy of the repo never writes into another checkout)."""
+    return os.environ.get("LOGSTASH_SPARK_DATA") or os.path.join(_REPO_ROOT, "data")
+
+
 _GEN_CHUNK = 5_000_000   # turns per generator call (bounds numpy peak memory)
 _FILE_ROWS = 200_000     # rows per parquet file for parallel scan
 _FILES_PER_CHUNK = -(-_GEN_CHUNK // _FILE_ROWS)
@@ -222,8 +233,9 @@ def _write_chunk(args) -> int:
     return tbl.num_rows
 
 
-def ensure_transcripts_parquet(sf: float, out_root: str = "/root/repo/data") -> str:
-    """Generate-and-cache transcript parquet for a scale factor.
+def ensure_transcripts_parquet(sf: float, out_root: str | None = None) -> str:
+    """Generate-and-cache transcript parquet for a scale factor, under
+    ``out_root`` (default: ``default_data_root()``).
 
     sf=0.1 -> ~1M turns (10M turns per sf unit), written as multiple parquet
     files so local Spark gets parallel scan partitions.  Chunks are
@@ -232,7 +244,7 @@ def ensure_transcripts_parquet(sf: float, out_root: str = "/root/repo/data") -> 
     so the output is byte-identical at any worker count.
     """
     n_turns = int(sf * 10_000_000)
-    path = os.path.join(out_root, f"transcripts_sf{sf}")
+    path = os.path.join(out_root or default_data_root(), f"transcripts_sf{sf}")
     marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return path
@@ -258,7 +270,7 @@ def ensure_transcripts_parquet(sf: float, out_root: str = "/root/repo/data") -> 
 
 
 def ensure_transcripts_tsorted(spark, sf: float,
-                               out_root: str = "/root/repo/data",
+                               out_root: str | None = None,
                                n_files: int | None = None) -> str:
     """Delivery-ordered replay variant of the SF fixture (live-stream shape).
 
@@ -275,6 +287,7 @@ def ensure_transcripts_tsorted(spark, sf: float,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    out_root = out_root or default_data_root()
     src = ensure_transcripts_parquet(sf, out_root)
     path = os.path.join(out_root, f"transcripts_sf{sf}_tsorted")
     # Done-marker must be distinct from Spark's _SUCCESS: the parquet write

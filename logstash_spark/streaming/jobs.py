@@ -2,8 +2,10 @@
 
 Logstash lifecycle mapping (SURVEY.md §3.4): input threads -> readStream
 file/Iceberg source; the worker loop -> micro-batch engine; PeriodicFlush
-5 s ticks -> event-time watermark advancement; PQ+ack -> checkpoint WAL;
-outputs -> exactly-once foreachBatch sink.
+5 s ticks (PeriodicFlush.java:50-57) -> the continuous sessions query's
+processing-time trigger, on which the event-time watermark advances and
+closed sessions emit; PQ+ack -> checkpoint WAL; outputs -> exactly-once
+foreachBatch sink.
 
 All builders take/return DataFrames so batch and streaming share the same
 operator implementations (the functions in operators/ are
@@ -17,10 +19,9 @@ streaming-legal).  The composed job:
 
 plus the elapsed-analog stream-stream join and per-tool/per-role rollups.
 
-Scale notes: the stateful stages key by conv_id — the same salting
-strategy as batch applies upstream for hot conversations; state store
-size is bounded by the watermark delay (sessions older than the watermark
-are finalized and evicted).
+Scale notes: the stateful stages key by conv_id; state store size is
+bounded by the watermark delay (sessions older than the watermark are
+finalized and evicted).
 """
 
 from __future__ import annotations
@@ -32,6 +33,10 @@ from pyspark.sql import functions as F
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
+
+# the reference's flush tick (PeriodicFlush.java:50-57): flush-capable
+# filters such as aggregate emit only on it, per-event outputs flow at once
+PERIODIC_FLUSH_INTERVAL = "5 seconds"
 
 
 def stream_transcripts(spark: SparkSession, src_dir: str,
@@ -190,6 +195,15 @@ def run_north_star(
     * sessions: session-window rollup keyed conv_id (the stateful path;
                 its shuffle carries only the projected aggregation inputs).
 
+    Triggers: with ``available_now`` both queries drain what is there and
+    stop.  Otherwise the turns query runs batches back to back and the
+    sessions query runs on the reference's PeriodicFlush tick
+    (PERIODIC_FLUSH_INTERVAL), so the stateful work stays off the per-turn
+    latency path; no session can close before the watermark passes it
+    anyway.  With ``max_files_per_trigger`` set, the sessions query runs
+    back to back too: a file cap per 5 s tick would throttle it to
+    cap / 5 s files.
+
     Returns the list of StreamingQuery handles (await them all).
     """
     from logstash_spark.sinks.exactly_once import ExactlyOnceParquetSink
@@ -232,14 +246,17 @@ def run_north_star(
             stream_transcripts(spark, src_dir, max_files_per_trigger)),
             gap, watermark)
 
-    sess_sink = ExactlyOnceParquetSink(
-        os.path.join(out_dir, "sessions"), merge_keys=["conv_id", "session_start"])
+    # no merge_keys: append-mode session_window emits each (conv_id,
+    # session) once, and epoch replays are no-ops via the commit log
+    sess_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "sessions"))
     w = (sessions.writeStream.outputMode("append")
          .option("checkpointLocation", os.path.join(checkpoint_dir, "sessions"))
          .queryName("north_star_sessions")
          .foreachBatch(sess_sink.foreach_batch()))
     if available_now:
         w = w.trigger(availableNow=True)
+    elif not max_files_per_trigger:
+        w = w.trigger(processingTime=PERIODIC_FLUSH_INTERVAL)
     queries.append(w.start())
     return NorthStarHandle(queries)
 
@@ -318,7 +335,7 @@ def run_bus_to_sessions(spark: SparkSession, bus_dir: str, out_dir: str,
 
     src = spark.readStream.schema(PARSED_SCHEMA).parquet(bus_dir)
     sessions = session_rollup_stream(src, gap, watermark)
-    sink = ExactlyOnceParquetSink(out_dir, merge_keys=["conv_id", "session_start"])
+    sink = ExactlyOnceParquetSink(out_dir)
     w = (sessions.writeStream.outputMode("append")
          .option("checkpointLocation", checkpoint_dir)
          .foreachBatch(sink.foreach_batch()))

@@ -167,3 +167,50 @@ def test_http_webhook_bridge(spark, tmp_path):
     assert rows["deploy"].status == 200
     assert "failed_hook" in (rows["rollback"].tags or [])
     assert not rows["deploy"].tags
+
+
+def test_lumberjack_send_peer_closing_mid_ack_raises():
+    """A peer that closes after half of the 4-byte ACK count makes recv()
+    return b"" forever; the client must raise, not spin.  The send runs in
+    a thread so a spinning client fails this test on its join timeout
+    instead of hanging the suite."""
+    import pytest
+
+    from logstash_spark.sources.beats_input import lumberjack_send
+
+    srv = socket.socket()
+    srv.bind(("127.0.0.1", 0))
+    srv.listen(1)
+
+    def peer():
+        conn, _ = srv.accept()
+        with conn:
+            conn.settimeout(15)
+            conn.recv(65536)
+            conn.sendall(b"2A\x00\x00")  # ACK header plus 2 of 4 count bytes
+            # half-close (FIN, not RST): the client sees a clean EOF; then
+            # wait for it to hang up so unread bytes never turn into a reset
+            conn.shutdown(socket.SHUT_WR)
+            try:
+                while conn.recv(65536):
+                    pass
+            except OSError:
+                pass
+
+    threading.Thread(target=peer, daemon=True).start()
+    outcome = []
+
+    def send():
+        try:
+            outcome.append(lumberjack_send("127.0.0.1", srv.getsockname()[1],
+                                           [{"message": "x"}]))
+        except Exception as e:  # noqa: BLE001 - the test inspects it below
+            outcome.append(e)
+
+    client = threading.Thread(target=send, daemon=True)
+    client.start()
+    client.join(timeout=10)
+    srv.close()
+    if client.is_alive():
+        pytest.fail("lumberjack_send still running 10 s after the peer closed")
+    assert isinstance(outcome[0], ConnectionError), outcome

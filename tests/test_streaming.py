@@ -22,10 +22,15 @@ from logstash_spark.sinks.exactly_once import ExactlyOnceParquetSink
 @pytest.fixture(scope="module")
 def stream_src(tmp_path_factory):
     """Small transcript parquet dir written as multiple files."""
+    d = tmp_path_factory.mktemp("stream_src")
+    _write_stream_src(str(d), generate_transcripts(4000, seed=7))
+    return str(d)
+
+
+def _write_stream_src(d, tbl):
+    """Write ``tbl`` into ``d`` as 4 event-time-ordered parquet files."""
     import pyarrow.parquet as pq
 
-    d = tmp_path_factory.mktemp("stream_src")
-    tbl = generate_transcripts(4000, seed=7)
     # a real transcript stream arrives (roughly) time-ordered; slice files by
     # event time so the watermark semantics match ingestion order (the ~1%
     # late rows inside the generator still exercise the late path)
@@ -41,7 +46,6 @@ def stream_src(tmp_path_factory):
         # pickup order arbitrary and can deliver older data behind the
         # watermark. Pin strictly increasing mtimes = arrival order.
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-    return str(d)
 
 
 def _wait(q):
@@ -136,6 +140,151 @@ def test_checkpoint_resume_processes_only_new_files(spark, stream_src, tmp_path)
     n3 = sink.read(spark).count()
     assert n3 > n2, "new files after resume must produce new sessions"
     assert sink.committed_ids() > epochs1
+
+
+def _sessions_trigger(handle):
+    q = next(q for q in handle.queries if q.name == "north_star_sessions")
+    return q._jsq.streamingQuery().trigger().toString()
+
+
+def test_continuous_north_star_matches_available_now(spark, tmp_path):
+    """The continuous north star (turns back to back, sessions on the 5 s
+    flush tick) fed in two halves while it runs, so the sessions query sees
+    at least two data ticks with the watermark moving between them.  Once
+    both queries have read everything and the sessions query has run its
+    no-data batch, the turns sink holds every input turn exactly once and
+    the sessions sink equals what an available_now run of the same input
+    emits."""
+    import time
+
+    staging = str(tmp_path / "staging")
+    src = str(tmp_path / "src")
+    os.makedirs(staging)
+    os.makedirs(src)
+    tbl = generate_transcripts(4000, seed=7)
+    _write_stream_src(staging, tbl)
+    n = tbl.num_rows
+    parts = sorted(os.listdir(staging))
+
+    def deliver(names):
+        # rename keeps the pinned mtimes, and the source never lists a
+        # half-written file
+        for name in names:
+            os.rename(os.path.join(staging, name), os.path.join(src, name))
+
+    deliver(parts[:2])
+    live = J.run_north_star(spark, src, str(tmp_path / "live_out"),
+                            str(tmp_path / "live_ckpt"), available_now=False)
+    turns_q, sess_q = live.queries
+    try:
+        assert _sessions_trigger(live) == "ProcessingTimeTrigger(5000)"
+
+        def wait_until(cond, what):
+            deadline = time.time() + 120
+            while not cond():
+                assert time.time() < deadline, what
+                assert turns_q.exception() is None and sess_q.exception() is None
+                time.sleep(0.2)
+
+        def sess_rows():
+            return sum(p["numInputRows"] for p in sess_q.recentProgress)
+
+        wait_until(lambda: sess_rows() > 0, "no first sessions data batch")
+        first_half = sess_rows()
+        assert first_half < n
+        deliver(parts[2:])
+
+        def drained():
+            turns_rows = sum(p["numInputRows"] for p in turns_q.recentProgress)
+            sp = sess_q.recentProgress
+            last_data = max((p["batchId"] for p in sp if p["numInputRows"]),
+                            default=None)
+            no_data_after = last_data is not None and any(
+                p["batchId"] > last_data and not p["numInputRows"] for p in sp)
+            return turns_rows == n and sess_rows() == n and no_data_after
+
+        wait_until(drained, "continuous north star did not drain")
+        data_ticks = [p for p in sess_q.recentProgress if p["numInputRows"]]
+        assert len(data_ticks) >= 2, data_ticks
+    finally:
+        for q in live.queries:
+            q.stop()
+
+    closed = J.run_north_star(spark, src, str(tmp_path / "closed_out"),
+                              str(tmp_path / "closed_ckpt"))
+    closed.awaitTermination()
+
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    turns = ExactlyOnceParquetSink(str(tmp_path / "live_out" / "turns")).read(spark)
+    got_turns = [tuple(r) for r in turns.select(*cols).collect()]
+    assert len(got_turns) == n
+    assert set(got_turns) == {tuple(r) for r in spark.read.parquet(src)
+                              .select(*cols).collect()}
+
+    live_sink = ExactlyOnceParquetSink(str(tmp_path / "live_out" / "sessions"))
+    emitting = []
+    for i in live_sink.committed_ids():
+        with open(os.path.join(live_sink.commits_dir, f"{i}.json")) as f:
+            if json.load(f)["rows"]:
+                emitting.append(i)
+    # sessions closed by the first half's watermark emit before the rest
+    assert len(emitting) >= 2, emitting
+
+    live_sess = live_sink.read(spark)
+    closed_sess = ExactlyOnceParquetSink(
+        str(tmp_path / "closed_out" / "sessions")).read(spark)
+    got = [tuple(r) for r in live_sess.select(*closed_sess.columns).collect()]
+    exp = [tuple(r) for r in closed_sess.collect()]
+    assert got, "continuous run emitted no sessions"
+    assert sorted(got) == sorted(exp)
+
+
+def test_capped_continuous_sessions_not_on_flush_tick(spark, stream_src, tmp_path):
+    """With max_files_per_trigger the sessions query runs back to back: a
+    file cap per 5 s tick would throttle it to cap / 5 s files."""
+    h = J.run_north_star(spark, stream_src, str(tmp_path / "o"),
+                         str(tmp_path / "c"), max_files_per_trigger=1,
+                         available_now=False)
+    try:
+        assert _sessions_trigger(h) == "ProcessingTimeTrigger(0)"
+    finally:
+        for q in h.queries:
+            q.stop()
+
+
+def test_streamed_sessions_unique_across_epochs(spark, stream_src, tmp_path):
+    """The sessions sink carries no dedup key: append-mode session_window
+    must itself emit each (conv_id, session_start) once over all epochs."""
+    out = str(tmp_path / "out")
+    q = J.run_north_star(spark, stream_src, out, str(tmp_path / "ckpt"),
+                         max_files_per_trigger=1, emit_turns=False)
+    _wait(q)
+    sink = ExactlyOnceParquetSink(os.path.join(out, "sessions"))
+    rows_per_epoch = []
+    for i in sink.committed_ids():
+        with open(os.path.join(sink.commits_dir, f"{i}.json")) as f:
+            rows_per_epoch.append(json.load(f)["rows"])
+    assert sum(1 for r in rows_per_epoch if r) >= 2, rows_per_epoch
+    keys = [(r.conv_id, r.session_start)
+            for r in sink.read(spark).select("conv_id", "session_start").collect()]
+    assert len(keys) == sum(rows_per_epoch)
+    assert len(keys) == len(set(keys))
+
+
+def test_fixture_data_root_follows_checkout_and_env(tmp_path, monkeypatch):
+    """Generated fixtures land under this checkout's data/ (never a fixed
+    absolute path), or under $LOGSTASH_SPARK_DATA when it is set."""
+    import logstash_spark
+    from logstash_spark.sources import transcripts as T
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(logstash_spark.__file__)))
+    monkeypatch.delenv("LOGSTASH_SPARK_DATA", raising=False)
+    assert T.default_data_root() == os.path.join(checkout, "data")
+
+    monkeypatch.setenv("LOGSTASH_SPARK_DATA", str(tmp_path))
+    path = T.ensure_transcripts_parquet(0.0001)
+    assert path == os.path.join(str(tmp_path), "transcripts_sf0.0001")
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def test_elapsed_stream_join(spark, stream_src, tmp_path):
