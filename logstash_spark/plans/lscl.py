@@ -377,20 +377,22 @@ def expand_sections(sections: dict[str, list],
     (conditional EXPRESSIONS are not expanded — the reference substitutes
     in plugin config values only)."""
     env = _env_snapshot(context)
-
-    def walk(nodes):
-        for n in nodes:
-            if isinstance(n, PluginNode):
-                n.attrs = expand_env_value(n.attrs, env)
-            elif isinstance(n, IfNode):
-                for _cond, body in n.branches:
-                    walk(body)
-                if n.else_nodes:
-                    walk(n.else_nodes)
-
     for nodes in sections.values():
-        walk(nodes)
+        for n in walk_plugins(nodes):
+            n.attrs = expand_env_value(n.attrs, env)
     return sections
+
+
+def walk_plugins(nodes):
+    """Every PluginNode in ``nodes``, including those nested in conditionals."""
+    for n in nodes:
+        if isinstance(n, PluginNode):
+            yield n
+        elif isinstance(n, IfNode):
+            for _cond, body in n.branches:
+                yield from walk_plugins(body)
+            if n.else_nodes:
+                yield from walk_plugins(n.else_nodes)
 
 
 # ---------------------------------------------------------------------------
@@ -991,7 +993,8 @@ class LsclJob:
     the output section routes rows per-sink via the same predicate compiler.
     """
 
-    def __init__(self, sections: dict, context: dict | None = None):
+    def __init__(self, sections: dict, context: dict | None = None,
+                 pipeline_id: str | None = None):
         self.context = context or {}
         self.inputs = sections.get("input", [])
         self.outputs = sections.get("output", [])
@@ -999,14 +1002,18 @@ class LsclJob:
         # callers stop them after the query terminates
         self.http_spools: list = []
         self._ordered = False  # set by run_stream(ordered=True)
-        # bus sender identity: a deterministic digest of this job's config
-        # AST — re-compiling the SAME config replaces its own registration
-        # (the reload contract) instead of unioning a stale copy, which
-        # keying by object id() did (and id() can be reused after GC)
-        import hashlib as _hashlib
+        # bus sender identity: re-compiling the SAME pipeline replaces its
+        # own registration (the reload contract) instead of unioning a
+        # stale copy.  A pipelines.yml job is keyed by its pipeline.id, so
+        # two pipelines with identical config text both fan in; a bare
+        # config falls back to a deterministic digest of its AST
+        if pipeline_id is not None:
+            self._bus_identity = pipeline_id
+        else:
+            import hashlib as _hashlib
 
-        self._bus_identity = _hashlib.md5(
-            repr(sections).encode()).hexdigest()
+            self._bus_identity = _hashlib.md5(
+                repr(sections).encode()).hexdigest()
         self.filter_nodes = sections.get("filter", [])
         self.pipeline = Pipeline(compile_items(sections.get("filter", []),
                                                self.context))
@@ -1022,6 +1029,20 @@ class LsclJob:
                 raise SyntaxError(
                     f"LSCL: unsupported output {n.name!r} "
                     f"(supported: {', '.join(sorted(_SUPPORTED_OUTPUTS))})")
+        # each s3 output writes run=<token>/epoch_id=N under its prefix with
+        # overwrite, so a second output on the same bucket+prefix would
+        # silently replace the first one's epochs
+        s3_targets = set()
+        for n in walk_plugins(self.outputs):
+            if n.name != "s3":
+                continue
+            target = (n.attrs.get("bucket"),
+                      n.attrs.get("prefix", "").rstrip("/"))
+            if target in s3_targets:
+                raise SyntaxError(
+                    f"LSCL: two s3 outputs write bucket {target[0]!r} "
+                    f"prefix {target[1]!r}; give each its own prefix")
+            s3_targets.add(target)
 
     # -- input section ---------------------------------------------------------
 

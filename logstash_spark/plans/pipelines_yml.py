@@ -32,10 +32,10 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from logstash_spark.plans.lscl import (IfNode, LsclJob, Parser, PipelineBus,
-                                       PluginNode, _env_snapshot,
-                                       expand_env_str, expand_sections,
-                                       tokenize)
+from logstash_spark.plans.lscl import (LsclJob, Parser, PipelineBus,
+                                       _env_snapshot, expand_env_str,
+                                       expand_sections, tokenize,
+                                       walk_plugins)
 
 
 @dataclass
@@ -119,17 +119,6 @@ def load_pipelines_yml(text_or_path: str,
     return PipelineSet(specs, context)
 
 
-def _walk_plugins(nodes):
-    for n in nodes:
-        if isinstance(n, PluginNode):
-            yield n
-        elif isinstance(n, IfNode):
-            for _cond, body in n.branches:
-                yield from _walk_plugins(body)
-            if n.else_nodes:
-                yield from _walk_plugins(n.else_nodes)
-
-
 class PipelineSet:
     """A named set of compiled pipelines sharing one PipelineBus."""
 
@@ -145,7 +134,7 @@ class PipelineSet:
                 Parser(tokenize(spec.config_text)).parse_config(),
                 self.context)
             self._sections[pid] = sections
-            self._jobs[pid] = LsclJob(sections, self.context)
+            self._jobs[pid] = LsclJob(sections, self.context, pipeline_id=pid)
 
     @property
     def bus(self) -> PipelineBus:
@@ -163,10 +152,10 @@ class PipelineSet:
         """(listens_on, sends_to) bus addresses of one pipeline."""
         sec = self._sections[pid]
         listens, sends = set(), set()
-        for n in _walk_plugins(sec.get("input", [])):
+        for n in walk_plugins(sec.get("input", [])):
             if n.name == "pipeline":
                 listens.add(n.attrs["address"])
-        for n in _walk_plugins(sec.get("output", [])):
+        for n in walk_plugins(sec.get("output", [])):
             if n.name == "pipeline":
                 addrs = n.attrs["send_to"]
                 sends.update(addrs if isinstance(addrs, list) else [addrs])

@@ -33,6 +33,11 @@ def get_spark(
     * Shuffle partitions default to the local core count; on a real cluster
       set this to 2-3x total executor cores (or rely on AQE coalescing from
       a higher initial number).
+    * File-listing fan-out equals that same parallelism
+      (`parallelPartitionDiscovery.parallelism`): a scan of more than 32
+      paths lists them in a Spark job, which by default launches one task
+      per path, so a continuous sessions tick over ~100 new files would
+      queue ~100 listing tasks ahead of the per-turn batch.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -63,6 +68,8 @@ def get_spark(
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -289,6 +289,42 @@ def test_lscl_output_conditional_routing(spark, tmp_path):
     assert sorted(r.status for r in ok.collect()) == [200, 302]
 
 
+def test_pipelines_with_identical_config_both_fan_in(spark):
+    """Bus senders are keyed by pipeline.id: two pipelines built from the
+    same config text must not replace each other's registration."""
+    from logstash_spark.plans.pipelines_yml import load_pipelines_yml
+
+    sender = ('"input { generator { count => 3 } } '
+              'output { pipeline { send_to => [\\"fan\\"] } }"')
+    yml = f"""
+- pipeline.id: down
+  config.string: "input {{ pipeline {{ address => \\"fan\\" }} }} output {{ null {{}} }}"
+- pipeline.id: s1
+  config.string: {sender}
+- pipeline.id: s2
+  config.string: {sender}
+"""
+    out = load_pipelines_yml(yml).run(spark)
+    assert out["down"].count() == 6
+
+
+@pytest.mark.parametrize("outputs", [
+    's3 { bucket => "b" prefix => "out/" } s3 { bucket => "b" prefix => "out" }',
+    's3 { bucket => "b" prefix => "out/" } '
+    'if [x] { s3 { bucket => "b" prefix => "out/" codec => "line" } }',
+], ids=["top-level", "nested"])
+def test_duplicate_s3_output_target_rejected(outputs):
+    """Two s3 outputs on one bucket+prefix would overwrite each other's
+    epoch_id=N directories; the config must not compile."""
+    from logstash_spark.plans.lscl import compile_lscl_job
+
+    with pytest.raises(SyntaxError, match="two s3 outputs"):
+        compile_lscl_job("input { stdin {} } output { %s }" % outputs)
+    # distinct prefixes on the same bucket stay legal
+    compile_lscl_job('input { stdin {} } output { s3 { bucket => "b" '
+                     'prefix => "a/" } s3 { bucket => "b" prefix => "c/" } }')
+
+
 def test_lscl_decorators_sprintf(spark):
     """LSCL add_tag/add_field template key and value per event
     (decorators.rb:28-43)."""

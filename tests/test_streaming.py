@@ -271,6 +271,47 @@ def test_streamed_sessions_unique_across_epochs(spark, stream_src, tmp_path):
     assert len(keys) == len(set(keys))
 
 
+def test_file_listing_fanout_capped_at_parallelism(spark, tmp_path):
+    """Guards the continuous sessions tick: each tick's getBatch lists about
+    100 new files, and above 32 paths Spark lists them in a job of one task
+    per path unless get_spark caps the fan-out at the engine's parallelism.
+    `spark.read.parquet(*paths)` takes the same InMemoryFileIndex path."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = []
+    for i in range(100):
+        p = str(tmp_path / f"f{i:03d}.parquet")
+        pq.write_table(pa.table({"n": [i]}), p)
+        paths.append(p)
+    sc = spark.sparkContext
+    group = "listing-fanout"
+    sc.setJobGroup(group, "listing fan-out probe")
+    try:
+        assert spark.read.parquet(*paths).count() == 100
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+
+    def settled_stages():
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        stages = [tracker.getStageInfo(s) for job in jobs for s in job.stageIds]
+        if jobs and all(j.status == "SUCCEEDED" for j in jobs) and all(stages):
+            return stages
+        return None
+
+    # the status store is fed asynchronously by the listener bus
+    deadline = time.monotonic() + 10
+    while (stages := settled_stages()) is None:
+        assert time.monotonic() < deadline, "read jobs never reached the status store"
+        time.sleep(0.1)
+    tasks = [s.numTasks for s in stages]
+    assert max(tasks) <= sc.defaultParallelism, tasks
+
+
 def test_fixture_data_root_follows_checkout_and_env(tmp_path, monkeypatch):
     """Generated fixtures land under this checkout's data/ (never a fixed
     absolute path), or under $LOGSTASH_SPARK_DATA when it is set."""
