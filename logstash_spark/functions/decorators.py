@@ -35,10 +35,13 @@ def _tags_or_empty() -> Column:
     return F.coalesce(F.col(TAGS_COL), F.array().cast("array<string>"))
 
 
-def add_tag_expr(tag: Column | str, when: Column | None = None) -> Column:
-    """append tag WITHOUT dedup (decorators.rb:61)."""
-    t = tag if isinstance(tag, Column) else F.lit(tag)
-    appended = F.concat(_tags_or_empty(), F.array(t))
+def add_tag_expr(tag: Column | str | list[str],
+                 when: Column | None = None) -> Column:
+    """append tag(s) WITHOUT dedup (decorators.rb:61); a list appends each
+    tag in order (the :array form of tag_on_failure)."""
+    tags = tag if isinstance(tag, list) else [tag]
+    appended = F.concat(_tags_or_empty(), F.array(
+        *[t if isinstance(t, Column) else F.lit(t) for t in tags]))
     if when is None:
         return appended
     return F.when(when, appended).otherwise(_tags_or_empty())
@@ -62,7 +65,8 @@ def remove_tag_expr(tag: Column | str, when: Column | None = None) -> Column:
     return F.when(when, removed).otherwise(_tags_or_empty())
 
 
-def add_tag(df: DataFrame, tag: str, when: Column | None = None) -> DataFrame:
+def add_tag(df: DataFrame, tag: str | list[str],
+            when: Column | None = None) -> DataFrame:
     return ensure_tags(df).withColumn(TAGS_COL, add_tag_expr(tag, when))
 
 

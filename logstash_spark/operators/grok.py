@@ -149,7 +149,7 @@ def grok(
     source: str,
     template: str | list[str],
     patterns: dict[str, str] | None = None,
-    tag_on_failure: str = "_grokparsefailure",
+    tag_on_failure: str | list[str] = "_grokparsefailure",
     keep_unmatched: bool = True,
     single_pass: bool = True,
     project: list[str] | None = None,

@@ -36,7 +36,7 @@ def lookup(
     dim_key: str,
     fetch: dict[str, str] | list[str],
     defaults: dict[str, object] | None = None,
-    tag_on_miss: str | None = None,
+    tag_on_miss: str | list[str] | None = None,
     broadcast: bool = True,
 ) -> DataFrame:
     """Enrich events with columns fetched from a dimension table.

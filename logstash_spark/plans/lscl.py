@@ -14,26 +14,16 @@ to a DataFrame DAG:
     pipe = compile_lscl(config_text)
     out = pipe(df)
 
-Supported subset: the filter-section plugins implemented in
-logstash_spark.operators — grok, dissect, mutate, date, kv, csv, json,
-xml, yaml, fingerprint, uuid, anonymize, translate (+dictionary_path),
-prune, de_dot, truncate, urldecode, syslog_pri, cidr, drop, clone, split,
-useragent, geoip, dns, jdbc_static/lookup (context-passed snapshots), the
-stateful set throttle/elapsed/aggregate/metrics (plugin-shaped attrs onto
-operators/windows.py; batch plans — run_stream rejects them with their
-streaming twins), and the community set bytes, cipher, environment,
-extractnumbers, json_encode, metricize, tld, age, alter, range — with
-full conditional expressions (`if / else if / else`, nesting) and the
-common-decorator attrs add_tag/remove_tag/add_field/remove_field applied
-under the plugin's success predicate (filters/base.rb:195-226).  `ruby`
-is rejected at compile time with the Arrow-batch escape-hatch pointer.  `compile_lscl`
-compiles a filter-only config; `compile_lscl_job` compiles a COMPLETE
-config — inputs generator/file/stdin plus the stream inputs kafka (jar-
-gated)/tcp/syslog and the p2p `pipeline{address}`; outputs stdout/file/
-null/elasticsearch/tcp, `pipeline{send_to}` (PipelineBus plan composition)
-and the jar-gated iceberg MERGE sink — onto sources/ and sinks/.  Batch
-execution via `LsclJob.run`; `LsclJob.run_stream` runs the same config as
-ONE Structured Streaming query (foreachBatch output delivery, checkpointed).
+Supported plugins: one table per section — ``_FILTERS``, ``_INPUTS`` and
+``_OUTPUTS`` below map each plugin name to its builder and flags, and the
+supported-name lists in error messages are derived from them.  Filters
+take full conditional expressions (`if / else if / else`, nesting) and the
+common-decorator attrs add_tag/remove_tag/add_field/remove_field, applied
+under the plugin's success predicate (filters/base.rb:195-226).
+`compile_lscl` compiles a filter-only config; `compile_lscl_job` compiles
+a COMPLETE config onto sources/ and sinks/: batch execution via
+`LsclJob.run`, and `LsclJob.run_stream` runs the same config as ONE
+Structured Streaming query (foreachBatch output delivery, checkpointed).
 
 Scale note: the compiler output is exactly the hand-built Pipeline — same
 branch/union shapes, same Column reuse — so everything Catalyst does for
@@ -43,14 +33,30 @@ parsed configs identically.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import json
+import os
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logstash_spark.functions import conditions as C
+from logstash_spark.functions import fieldref
+from logstash_spark.functions.decorators import (add_field_sprintf,
+                                                 add_tag_sprintf,
+                                                 remove_field, remove_tag,
+                                                 strip_metadata)
+from logstash_spark.operators import (codecs, community, date, dissect,
+                                      enrich, grok, lookup, misc, mutate,
+                                      parsers, windows)
+from logstash_spark.plans.keystore import load_keystore
 from logstash_spark.plans.pipeline import If, Pipeline, Stage
+from logstash_spark.sources import batch_inputs, connectors
 
 # ---------------------------------------------------------------------------
 # lexer
@@ -358,13 +364,9 @@ def _env_snapshot(context: dict | None) -> dict:
     cluster-safe shape (same as the environment filter): expanded values
     become plain literals in the plan, so executors never consult their
     own environments or keystores."""
-    import os
-
     env = dict(os.environ)
     ctx = context or {}
     if ctx.get("keystore"):
-        from logstash_spark.plans.keystore import load_keystore
-
         env.update(load_keystore(ctx["keystore"],
                                  password=ctx.get("keystore_password")))
     env.update(ctx.get("env") or {})
@@ -402,9 +404,7 @@ def walk_plugins(nodes):
 def field_col(parts: list[str]) -> Column:
     """[a][b][0] path -> Column via the shared fieldref resolver (list
     indexing + negative indices, Accessors.java:152-187)."""
-    from logstash_spark.functions.fieldref import field_col as _fc
-
-    return _fc(None, "".join(f"[{p}]" for p in parts))
+    return fieldref.field_col(None, "".join(f"[{p}]" for p in parts))
 
 
 def compile_expr(ast, df=None) -> Column:
@@ -465,12 +465,8 @@ def _compile_in(l, r, df=None) -> Column:
     if r[0] == "list":
         return C.in_(lv, r[1])
     if r[0] == "field" and df is not None:
-        from pyspark.sql import types as T
-
-        from logstash_spark.functions.fieldref import field_dtype
-
         ref = "".join(f"[{p}]" for p in r[1])
-        dtype = field_dtype(df.schema, ref)
+        dtype = fieldref.field_dtype(df.schema, ref)
         rv = _operand(r)
         if isinstance(dtype, T.ArrayType):
             return C.in_array(lv, rv)
@@ -481,35 +477,33 @@ def _compile_in(l, r, df=None) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# plugin compiler
+# filter section: one table, name -> _Filter
 # ---------------------------------------------------------------------------
 
-_FAILURE_TAG = {
-    "grok": "_grokparsefailure",
-    "dissect": "_dissectfailure",
-    "date": "_dateparsefailure",
-    "json": "_jsonparsefailure",
-    "xml": "_xmlparsefailure",
-    "yaml": "_yamlparsefailure",
-    "bytes": "_bytesparsefailure",
-}
+def _as_list(v) -> list:
+    return v if isinstance(v, list) else [v]
 
 
-def _gsub_triplets(v: list) -> list[tuple[str, str, str]]:
-    return [tuple(v[i:i + 3]) for i in range(0, len(v), 3)]
+def _groups(v: list, n: int) -> list[tuple]:
+    """Flat LSCL array -> n-tuples (mutate gsub, alter, range)."""
+    return [tuple(v[i:i + n]) for i in range(0, len(v), n)]
 
 
-_SUPPORTED_PLUGINS = frozenset({
-    "grok", "dissect", "mutate", "date", "kv", "csv", "json", "xml", "yaml",
-    "fingerprint", "uuid", "anonymize", "translate", "prune", "de_dot",
-    "truncate", "urldecode", "syslog_pri", "cidr", "drop", "clone",
-    "split", "useragent", "geoip", "dns", "jdbc_static", "lookup",
-    # community set (operators/community.py)
-    "bytes", "cipher", "environment", "extractnumbers", "json_encode",
-    "metricize", "tld", "age", "alter", "range",
-    # stateful plugins (operators/windows.py) — plugin-shaped attrs
-    "throttle", "elapsed", "aggregate", "metrics",
-})
+def _pair(v) -> tuple:
+    """The one ``key => value`` of a single-entry hash (or a 2-array)."""
+    (k, x), = v.items() if isinstance(v, dict) else [tuple(v)]
+    return k, x
+
+
+def _prefix(a: dict, default: str) -> str:
+    return f"{a['target']}_" if a.get("target") else default
+
+
+def _ctx(context: dict, key: str, hint: str):
+    """A session resource the config references by name (context=...)."""
+    if context.get(key) is None:
+        raise SyntaxError(f"LSCL: {hint}")
+    return context[key]
 
 
 def _sprintf_field(v: str, attr: str) -> str:
@@ -524,371 +518,352 @@ def _sprintf_field(v: str, attr: str) -> str:
         f"(got {v!r}); precompute composite keys into one column")
 
 
+def _grok(df, a, ctx):
+    src, tpl = _pair(a["match"])
+    return grok.grok(df, src, tpl, tag_on_failure=a["tag_on_failure"])
+
+
+def _mutate(df, a, ctx):
+    kw = {k: a[k] for k in ("coerce", "rename", "update", "replace",
+                            "convert", "uppercase", "capitalize", "lowercase",
+                            "strip", "split", "join", "merge", "copy")
+          if k in a}
+    if "convert" in kw:   # LSCL type names -> Spark type names
+        kw["convert"] = {f: {"integer": "int", "float": "double"}.get(t, t)
+                         for f, t in kw["convert"].items()}
+    if "gsub" in a:
+        kw["gsub"] = _groups(a["gsub"], 3)
+    return mutate.mutate(df, **kw)
+
+
+def _kv(df, a, ctx):
+    kw = {k: a[k] for k in ("field_split", "value_split", "include_keys",
+                            "exclude_keys", "prefix", "trim_key",
+                            "trim_value", "transform_key", "transform_value")
+          if k in a}
+    return parsers.kv(df, a.get("source", "message"), **kw)
+
+
+def _translate(df, a, ctx):
+    d = a.get("dictionary")
+    if d is None:
+        d = misc.load_dictionary_path(a["dictionary_path"])
+    return misc.translate(df, a.get("source", a.get("field")), d,
+                          a.get("target", "translation"),
+                          fallback=a.get("fallback"),
+                          exact=not a.get("regex", False))
+
+
+def _dns(df, a, ctx):
+    records = _ctx(ctx, "dns_records",
+                   "dns needs context={'dns_records': <DataFrame of (name, "
+                   "address)>} — a resolver snapshot; per-event DNS RPC is "
+                   "deliberately not offered (SURVEY §2.3)")
+    src = a.get("resolve", a.get("reverse", a.get("source")))
+    if isinstance(src, list):
+        src = src[0]
+    if str(src).startswith("%{"):
+        src = _sprintf_field(src, "dns.resolve")
+    return enrich.dns_filter(df, src, records,
+                             action=a.get("action", "replace"),
+                             reverse="reverse" in a,
+                             tag_on_failure=a["tag_on_failure"])
+
+
+def _lookup(df, a, ctx):
+    dim = _ctx(ctx, "lookup_dim",
+               "jdbc_static/lookup needs context={'lookup_dim': <dim "
+               "DataFrame>} (the cached local_db_object analog)")
+    return lookup.lookup(df, a["source"], dim, a.get("key", a["source"]),
+                         fetch=a.get("fetch", {}),
+                         defaults=a.get("defaults", {}),
+                         tag_on_miss=a["tag_on_failure"])
+
+
+def _alter(df, a, ctx):
+    kw = {}
+    if "condrewrite" in a:
+        kw["condrewrite"] = _groups(a["condrewrite"], 3)
+    if "condrewriteother" in a:
+        kw["condrewriteother"] = _groups(a["condrewriteother"], 4)
+    if "coalesce" in a:
+        c = a["coalesce"]
+        kw["coalesce"] = {c[0]: list(c[1:])} if isinstance(c, list) else c
+    return community.alter(df, **kw)
+
+
+def _throttle(df, a, ctx):
+    # logstash-filter-throttle (meta:211): after_count semantics,
+    # key = %{field}, period in seconds; tags `throttled` excess
+    key = _sprintf_field(a["key"], "throttle.key")
+    order_by = a.get("order_by")
+    return windows.throttle(df, a.get("timestamp_field", "ts"), [key],
+                            f'{int(a.get("period", 3600))} seconds',
+                            max_count=int(a.get("after_count", 1)),
+                            order_cols=_as_list(order_by) if order_by else None)
+
+
+def _elapsed(df, a, ctx):
+    # logstash-filter-elapsed: start/end tagged events correlated by
+    # unique_id_field within timeout; emits the match events (the plugin's
+    # new_event_on_match=true shape).  id_fields: extra start-event
+    # identity columns (an implicit ["turn_idx"] default broke user
+    # configs on frames without that test-dataset column)
+    key = a["unique_id_field"]
+    if str(key).startswith("%{"):
+        key = _sprintf_field(key, "elapsed.unique_id_field")
+    return windows.elapsed_join(
+        df, key, a.get("timestamp_field", "ts"),
+        start_pred=F.array_contains("tags", a["start_tag"]),
+        end_pred=F.array_contains("tags", a["end_tag"]),
+        max_lag=f'interval {int(a.get("timeout", 1800))} seconds',
+        id_cols=_as_list(a.get("id_fields", [])))
+
+
+def _metrics(df, a, ctx):
+    # logstash-filter-metrics (meta:181): meter -> windowed counts + rate;
+    # timer -> count/min/max/mean/stddev + percentiles.  flush_interval
+    # (default 5s in the reference's processing-time model) becomes the
+    # event-time window size.
+    secs = int(a.get("flush_interval", 3600))
+    ts_col = a.get("timestamp_field", "ts")
+    if "timer" in a:
+        tname, tfield = _pair(a["timer"])
+        if str(tfield).startswith("%{"):
+            tfield = _sprintf_field(tfield, "metrics.timer")
+        out = windows.metrics_timer(
+            df, ts_col, [], tfield, size=f"{secs} seconds",
+            percentiles=tuple(p / 100 for p in a.get("percentiles",
+                                                     [50, 90, 95, 99])))
+        return out.withColumn("metric_name", F.lit(tname))
+    key = _sprintf_field(_as_list(a["meter"])[0], "metrics.meter")
+    out = windows.tumbling_rollup(df, ts_col, f"{secs} seconds", [key],
+                                  [F.count(F.lit(1)).alias("count")])
+    return out.withColumn("rate_per_sec", F.col("count") / F.lit(secs))
+
+
+def _aggregate(df, a, ctx):
+    # logstash-filter-aggregate, timeout/push-map mode: sessionize by
+    # task_id with the standard summary aggs.  The `code` attr is
+    # arbitrary Ruby — rejected with the escape hatch pointer.
+    if "code" in a:
+        raise SyntaxError(
+            "LSCL: aggregate.code is arbitrary Ruby; express the "
+            "aggregation with operators/windows.session_rollup aggs=... in "
+            "Python, or operators/custom.batch_filter (the Arrow-batch ruby "
+            "analog)")
+    key = _sprintf_field(a["task_id"], "aggregate.task_id")
+    return windows.session_rollup(df, a.get("timeout_timestamp_field", "ts"),
+                                  key, f'{int(a.get("timeout", 1800))} seconds')
+
+
+@dataclass(frozen=True)
+class _Filter:
+    """One filter plugin: ``build(df, attrs, context) -> df`` plus the
+    flags the compiler reads.  ``row_local``: keeps cardinality and the
+    rest of the schema, so the plugin may run in the fused (single-select)
+    If path — drop/clone/split change row counts, prune/de_dot rewrite the
+    whole schema and would eat the fused path's snapshot columns.
+    ``failure_tag``: the default ``tag_on_failure``; the plugin's tags on
+    failure gate its decorators.  ``stream_twin``: the plugin's batch plan
+    (ranking window, time-bounded join, un-watermarked session groupBy) is
+    not legal in a streaming plan; run_stream names this twin instead."""
+    build: Callable[[DataFrame, dict, dict], DataFrame]
+    row_local: bool = True
+    failure_tag: str | None = None
+    stream_twin: str | None = None
+
+
+_FILTERS: dict[str, _Filter] = {
+    "grok": _Filter(_grok, failure_tag="_grokparsefailure"),
+    "dissect": _Filter(
+        lambda df, a, ctx: dissect.dissect(
+            df, *_pair(a["mapping"]), tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_dissectfailure"),
+    "mutate": _Filter(_mutate),
+    "date": _Filter(
+        lambda df, a, ctx: date.date(
+            df, a["match"][0], a["match"][1:],
+            target=a.get("target", "@timestamp"),
+            timezone=a.get("timezone"), tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_dateparsefailure"),
+    "kv": _Filter(_kv),
+    "csv": _Filter(lambda df, a, ctx: parsers.csv_filter(
+        df, a.get("source", "message"), a["columns"],
+        separator=a.get("separator", ","))),
+    "json": _Filter(
+        lambda df, a, ctx: parsers.json_filter(
+            df, a.get("source", "message"),
+            a.get("schema", "map<string,string>"), target=a.get("target"),
+            tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_jsonparsefailure"),
+    "xml": _Filter(
+        lambda df, a, ctx: parsers.xml_filter(
+            df, a.get("source", "message"), a["schema"],
+            target=a.get("target", "xml"), tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_xmlparsefailure"),
+    "yaml": _Filter(
+        lambda df, a, ctx: parsers.yaml_filter(
+            df, a.get("source", "message"), a["schema"],
+            target=a.get("target"), flat=bool(a.get("flat", False)),
+            tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_yamlparsefailure"),
+    "fingerprint": _Filter(lambda df, a, ctx: misc.fingerprint(
+        df, _as_list(a.get("source", ["message"])),
+        target=a.get("target", "fingerprint"),
+        method=a.get("method", "SHA256").upper())),
+    "uuid": _Filter(lambda df, a, ctx: misc.uuid_filter(
+        df, target=a.get("target", "uuid"),
+        overwrite=a.get("overwrite", False))),
+    "anonymize": _Filter(lambda df, a, ctx: misc.anonymize(
+        df, _as_list(a["fields"]), key=a.get("key", "secret"))),
+    "translate": _Filter(_translate),
+    "prune": _Filter(lambda df, a, ctx: misc.prune(
+        df, whitelist=a.get("whitelist_names"),
+        blacklist=a.get("blacklist_names")), row_local=False),
+    "de_dot": _Filter(lambda df, a, ctx: misc.de_dot(
+        df, separator=a.get("separator", "_")), row_local=False),
+    "truncate": _Filter(lambda df, a, ctx: misc.truncate(
+        df, _as_list(a["fields"]), a["length_bytes"])),
+    "urldecode": _Filter(lambda df, a, ctx: misc.urldecode(
+        df, a.get("field", "message"))),
+    "syslog_pri": _Filter(lambda df, a, ctx: misc.syslog_pri(
+        df, a.get("syslog_pri_field_name", "syslog_pri"))),
+    "cidr": _Filter(lambda df, a, ctx: misc.cidr(
+        df, a.get("address", a.get("source")), a["network"])),
+    # inside an if-branch a bare drop{} cancels everything there
+    "drop": _Filter(lambda df, a, ctx: misc.drop(
+        df, F.lit(True), percentage=a.get("percentage", 100),
+        sample_col=F.xxhash64(*df.columns)), row_local=False),
+    "clone": _Filter(lambda df, a, ctx: misc.clone(df, a["clones"]),
+                     row_local=False),
+    "split": _Filter(lambda df, a, ctx: misc.split_field(
+        df, a["field"], a.get("terminator", "\n")), row_local=False),
+    "useragent": _Filter(lambda df, a, ctx: enrich.useragent(
+        df, a.get("source", "message"), target_prefix=_prefix(a, "ua_"))),
+    "geoip": _Filter(
+        lambda df, a, ctx: enrich.geoip(
+            df, a.get("source", "message"),
+            _ctx(ctx, "geoip_blocks",
+                 "geoip needs context={'geoip_blocks': <blocks DataFrame>} "
+                 "(cidr network/country/city columns — see "
+                 "operators/enrich.cidr_blocks_df)"),
+            tag_on_miss=a["tag_on_failure"]),
+        failure_tag="_geoip_lookup_failure"),
+    "dns": _Filter(_dns, failure_tag="_dnsfailure"),
+    "jdbc_static": _Filter(_lookup, failure_tag="_lookup_miss"),
+    "lookup": _Filter(_lookup, failure_tag="_lookup_miss"),
+    # community set (operators/community.py)
+    "bytes": _Filter(
+        lambda df, a, ctx: community.bytes_filter(
+            df, a.get("source", "message"),
+            target=a.get("target", "bytes_value"),
+            conversion_method=a.get("conversion_method", "binary"),
+            tag_on_failure=a["tag_on_failure"]),
+        failure_tag="_bytesparsefailure"),
+    "cipher": _Filter(lambda df, a, ctx: community.cipher(
+        df, a["source"], a["target"], a["key"], mode=a.get("mode", "encrypt"),
+        algorithm=a.get("algorithm", "GCM"), iv=a.get("iv"))),
+    "environment": _Filter(lambda df, a, ctx: community.environment(
+        df, a["add_metadata_from_env"])),
+    "extractnumbers": _Filter(lambda df, a, ctx: community.extractnumbers(
+        df, a.get("source", "message"))),
+    "json_encode": _Filter(lambda df, a, ctx: community.json_encode(
+        df, a["source"], target=a.get("target", "json"))),
+    "metricize": _Filter(lambda df, a, ctx: community.metricize(
+        df, _as_list(a["metrics"])), row_local=False),
+    "tld": _Filter(lambda df, a, ctx: community.tld(
+        df, a.get("source", "message"), target_prefix=_prefix(a, "tld_"))),
+    "age": _Filter(lambda df, a, ctx: community.age(
+        df, target=a.get("target", "age"),
+        ts_col=a.get("source", "@timestamp"))),
+    "alter": _Filter(_alter),
+    "range": _Filter(lambda df, a, ctx: community.range_filter(
+        df, _groups(a["ranges"], 4), negate=a.get("negate", False)),
+        row_local=False),
+    # stateful plugins (operators/windows.py) — plugin-shaped attrs
+    "throttle": _Filter(_throttle, row_local=False,
+                        stream_twin="streaming/stateful.throttle_stream"),
+    "elapsed": _Filter(_elapsed, row_local=False,
+                       stream_twin="streaming/jobs.elapsed_stream_join"),
+    "aggregate": _Filter(
+        _aggregate, row_local=False,
+        stream_twin="streaming/jobs.session_rollup_stream (or "
+                    "streaming/stateful.aggregate_stateful_stream)"),
+    "metrics": _Filter(_metrics, row_local=False,
+                       stream_twin="streaming/jobs.rollup_stream"),
+}
+
+_FAIL_N = "__lscl_fail_n"  # the row's failure-tag count before the plugin
+
+
+def _count_tags(df: DataFrame, tags: list[str]) -> Column:
+    if "tags" not in df.columns:
+        return F.lit(0)
+    return F.size(F.filter(F.coalesce("tags", F.array().cast("array<string>")),
+                           lambda t: t.isin(tags)))
+
+
 def compile_plugin(node: PluginNode, context: dict | None = None) -> Stage:
     """One plugin instance -> a Stage.  Decorator attrs (filters/base.rb:
-    195-226) are applied under the plugin's success predicate.
+    195-226) are applied under the plugin's success predicate: this
+    application added none of its ``tag_on_failure`` tags.
 
     ``context`` supplies session-level resources a config references by
     name: ``geoip_blocks`` (DataFrame of CIDR blocks, the MaxMind-table
     analog — the reference ships a database file, we take a DataFrame).
     """
     context = context or {}
-    if node.name == "ruby":
-        raise SyntaxError(
-            "LSCL: ruby { code => ... } is arbitrary per-event Ruby; use "
-            "operators/custom.batch_filter (the Arrow-batch escape hatch: "
-            "pandas in, pandas out, 1->N rows) from Python")
-    if node.name not in _SUPPORTED_PLUGINS:
+    spec = _FILTERS.get(node.name)
+    if spec is None:
         raise SyntaxError(
             f"LSCL: unsupported filter plugin {node.name!r} (supported: "
-            f"{', '.join(sorted(_SUPPORTED_PLUGINS))})")
+            f"{', '.join(sorted(_FILTERS))}); per-event code such as ruby{{}} "
+            "belongs in operators/custom.batch_filter (the Arrow-batch escape "
+            "hatch: pandas in, pandas out, 1->N rows) from Python")
     a = dict(node.attrs)
-    add_tags = a.pop("add_tag", [])
-    remove_tags = a.pop("remove_tag", [])
+    add_tags = _as_list(a.pop("add_tag", []))
+    remove_tags = _as_list(a.pop("remove_tag", []))
     add_fields = a.pop("add_field", {})
-    remove_fields = a.pop("remove_field", [])
-    name = node.name
+    remove_fields = _as_list(a.pop("remove_field", []))
+    failure_tags = []
+    if spec.failure_tag:   # an :array option; every listed tag is added
+        failure_tags = a["tag_on_failure"] = _as_list(
+            a.get("tag_on_failure", spec.failure_tag))
 
     def op(df: DataFrame) -> DataFrame:
-        if name == "grok":
-            match = a["match"]
-            (src, tpl), = match.items() if isinstance(match, dict) else [tuple(match)]
-            from logstash_spark.operators.grok import grok
-            return grok(df, src, tpl,
-                        tag_on_failure=a.get("tag_on_failure", "_grokparsefailure"))
-        if name == "dissect":
-            (src, mapping), = a["mapping"].items()
-            from logstash_spark.operators.dissect import dissect
-            return dissect(df, src, mapping)
-        if name == "mutate":
-            from logstash_spark.operators.mutate import mutate
-            kw = {}
-            for k in ("coerce", "rename", "update", "replace", "convert",
-                      "uppercase", "capitalize", "lowercase", "strip",
-                      "split", "join", "merge", "copy"):
-                if k in a:
-                    kw[k] = a[k]
-            if "convert" in kw:   # LSCL type names -> Spark type names
-                kw["convert"] = {f: {"integer": "int", "float": "double",
-                                     "string": "string", "boolean": "boolean"}
-                                 .get(t, t) for f, t in kw["convert"].items()}
-            if "gsub" in a:
-                kw["gsub"] = _gsub_triplets(a["gsub"])
-            return mutate(df, **kw)
-        if name == "date":
-            m = a["match"]
-            from logstash_spark.operators.date import date
-            return date(df, m[0], m[1:], target=a.get("target", "@timestamp"),
-                        timezone=a.get("timezone"))
-        if name == "kv":
-            from logstash_spark.operators.parsers import kv
-            return kv(df, a.get("source", "message"),
-                      field_split=a.get("field_split", " "),
-                      value_split=a.get("value_split", "="),
-                      include_keys=a.get("include_keys"),
-                      exclude_keys=a.get("exclude_keys"),
-                      prefix=a.get("prefix", ""),
-                      trim_key=a.get("trim_key"),
-                      trim_value=a.get("trim_value"),
-                      transform_key=a.get("transform_key"),
-                      transform_value=a.get("transform_value"))
-        if name == "csv":
-            from logstash_spark.operators.parsers import csv_filter
-            return csv_filter(df, a.get("source", "message"), a["columns"],
-                              separator=a.get("separator", ","))
-        if name == "json":
-            from logstash_spark.operators.parsers import json_filter
-            return json_filter(df, a.get("source", "message"),
-                               a.get("schema", "map<string,string>"),
-                               target=a.get("target"))
-        if name == "xml":
-            from logstash_spark.operators.parsers import xml_filter
-            return xml_filter(df, a.get("source", "message"), a["schema"],
-                              target=a.get("target", "xml"))
-        if name == "yaml":
-            from logstash_spark.operators.parsers import yaml_filter
-            return yaml_filter(df, a.get("source", "message"), a["schema"],
-                               target=a.get("target"),
-                               flat=bool(a.get("flat", False)))
-        if name == "fingerprint":
-            from logstash_spark.operators.misc import fingerprint
-            srcs = a.get("source", ["message"])
-            return fingerprint(df, srcs if isinstance(srcs, list) else [srcs],
-                               target=a.get("target", "fingerprint"),
-                               method=a.get("method", "SHA256").upper())
-        if name == "uuid":
-            from logstash_spark.operators.misc import uuid_filter
-            return uuid_filter(df, target=a.get("target", "uuid"),
-                               overwrite=a.get("overwrite", False))
-        if name == "anonymize":
-            from logstash_spark.operators.misc import anonymize
-            flds = a["fields"]
-            return anonymize(df, flds if isinstance(flds, list) else [flds],
-                             key=a.get("key", "secret"))
-        if name == "translate":
-            from logstash_spark.operators.misc import (load_dictionary_path,
-                                                       translate)
-            d = a.get("dictionary")
-            if d is None:
-                d = load_dictionary_path(a["dictionary_path"])
-            return translate(df, a.get("source", a.get("field")),
-                             d,
-                             a.get("target", "translation"),
-                             fallback=a.get("fallback"),
-                             exact=not a.get("regex", False))
-        if name == "prune":
-            from logstash_spark.operators.misc import prune
-            return prune(df, whitelist=a.get("whitelist_names"),
-                         blacklist=a.get("blacklist_names"))
-        if name == "de_dot":
-            from logstash_spark.operators.misc import de_dot
-            return de_dot(df, separator=a.get("separator", "_"))
-        if name == "truncate":
-            from logstash_spark.operators.misc import truncate
-            flds = a["fields"]
-            return truncate(df, flds if isinstance(flds, list) else [flds],
-                            a["length_bytes"])
-        if name == "urldecode":
-            from logstash_spark.operators.misc import urldecode
-            return urldecode(df, a.get("field", "message"))
-        if name == "syslog_pri":
-            from logstash_spark.operators.misc import syslog_pri
-            return syslog_pri(df, a.get("syslog_pri_field_name", "syslog_pri"))
-        if name == "cidr":
-            from logstash_spark.operators.misc import cidr
-            return cidr(df, a.get("address", a.get("source")), a["network"])
-        if name == "drop":
-            from logstash_spark.operators.misc import drop
-            # inside an if-branch a bare drop{} cancels everything here
-            return drop(df, F.lit(True), percentage=a.get("percentage", 100),
-                        sample_col=F.xxhash64(*df.columns))
-        if name == "clone":
-            from logstash_spark.operators.misc import clone
-            return clone(df, a["clones"])
-        if name == "split":
-            from logstash_spark.operators.misc import split_field
-            return split_field(df, a["field"], a.get("terminator", "\n"))
-        if name == "useragent":
-            from logstash_spark.operators.enrich import useragent
-            prefix = a.get("target")
-            return useragent(df, a.get("source", "message"),
-                             target_prefix=f"{prefix}_" if prefix else "ua_")
-        if name == "geoip":
-            from logstash_spark.operators.enrich import geoip
-            blocks = context.get("geoip_blocks")
-            if blocks is None:
-                raise SyntaxError(
-                    "LSCL: geoip needs context={'geoip_blocks': <blocks DataFrame>} "
-                    "(cidr network/country/city columns — see "
-                    "operators/enrich.cidr_blocks_df)")
-            return geoip(df, a.get("source", "message"), blocks)
-        if name == "dns":
-            from logstash_spark.operators.enrich import dns_filter
-            records = context.get("dns_records")
-            if records is None:
-                raise SyntaxError(
-                    "LSCL: dns needs context={'dns_records': <DataFrame of "
-                    "(name, address)>} — a resolver snapshot; per-event DNS "
-                    "RPC is deliberately not offered (SURVEY §2.3)")
-            src = a.get("resolve", a.get("reverse", a.get("source")))
-            if isinstance(src, list):
-                src = src[0]
-            if str(src).startswith("%{"):
-                src = _sprintf_field(src, "dns.resolve")
-            return dns_filter(df, src, records,
-                              action=a.get("action", "replace"),
-                              reverse="reverse" in a)
-        if name == "jdbc_static" or name == "lookup":
-            from logstash_spark.operators.lookup import lookup
-            dim = context.get("lookup_dim")
-            if dim is None:
-                raise SyntaxError(
-                    "LSCL: jdbc_static/lookup needs context={'lookup_dim': "
-                    "<dim DataFrame>} (the cached local_db_object analog)")
-            return lookup(df, a["source"], dim, a.get("key", a["source"]),
-                          fetch=a.get("fetch", {}),
-                          defaults=a.get("defaults", {}),
-                          tag_on_miss=a.get("tag_on_failure", "_lookup_miss"))
-        if name == "bytes":
-            from logstash_spark.operators.community import bytes_filter
-            return bytes_filter(df, a.get("source", "message"),
-                                target=a.get("target", "bytes_value"),
-                                conversion_method=a.get("conversion_method",
-                                                        "binary"))
-        if name == "cipher":
-            from logstash_spark.operators.community import cipher
-            return cipher(df, a["source"], a["target"], a["key"],
-                          mode=a.get("mode", "encrypt"),
-                          algorithm=a.get("algorithm", "GCM"),
-                          iv=a.get("iv"))
-        if name == "environment":
-            from logstash_spark.operators.community import environment
-            return environment(df, a["add_metadata_from_env"])
-        if name == "extractnumbers":
-            from logstash_spark.operators.community import extractnumbers
-            return extractnumbers(df, a.get("source", "message"))
-        if name == "json_encode":
-            from logstash_spark.operators.community import json_encode
-            return json_encode(df, a["source"],
-                               target=a.get("target", "json"))
-        if name == "metricize":
-            from logstash_spark.operators.community import metricize
-            m = a["metrics"]
-            return metricize(df, m if isinstance(m, list) else [m])
-        if name == "tld":
-            from logstash_spark.operators.community import tld
-            prefix = a.get("target")
-            return tld(df, a.get("source", "message"),
-                       target_prefix=f"{prefix}_" if prefix else "tld_")
-        if name == "age":
-            from logstash_spark.operators.community import age
-            return age(df, target=a.get("target", "age"),
-                       ts_col=a.get("source", "@timestamp"))
-        if name == "alter":
-            from logstash_spark.operators.community import alter
-            kw = {}
-            if "condrewrite" in a:
-                c = a["condrewrite"]
-                kw["condrewrite"] = [tuple(c[i:i + 3])
-                                     for i in range(0, len(c), 3)]
-            if "condrewriteother" in a:
-                c = a["condrewriteother"]
-                kw["condrewriteother"] = [tuple(c[i:i + 4])
-                                          for i in range(0, len(c), 4)]
-            if "coalesce" in a:
-                c = a["coalesce"]
-                kw["coalesce"] = ({c[0]: list(c[1:])} if isinstance(c, list)
-                                  else c)
-            return alter(df, **kw)
-        if name == "range":
-            from logstash_spark.operators.community import range_filter
-            specs = []
-            r = a["ranges"]
-            for i in range(0, len(r), 4):
-                f_, lo, hi, action = r[i:i + 4]
-                specs.append((f_, lo, hi, action))
-            return range_filter(df, specs, negate=a.get("negate", False))
-        if name == "throttle":
-            # logstash-filter-throttle (meta:211): after_count semantics,
-            # key = %{field}, period in seconds; tags `throttled` excess
-            from logstash_spark.operators.windows import throttle as _throttle
-            key = _sprintf_field(a["key"], "throttle.key")
-            period = f'{int(a.get("period", 3600))} seconds'
-            order_by = a.get("order_by")
-            if isinstance(order_by, str):
-                order_by = [order_by]
-            return _throttle(df, a.get("timestamp_field", "ts"), [key],
-                             period, max_count=int(a.get("after_count", 1)),
-                             order_cols=order_by)
-        if name == "elapsed":
-            # logstash-filter-elapsed: start/end tagged events correlated
-            # by unique_id_field within timeout; emits the match events
-            # (the plugin's new_event_on_match=true shape)
-            from logstash_spark.operators.windows import elapsed_join
-            key = a["unique_id_field"]
-            if str(key).startswith("%{"):
-                key = _sprintf_field(key, "elapsed.unique_id_field")
-            timeout = int(a.get("timeout", 1800))
-            # id_fields: extra start-event identity columns (ADVICE r3 —
-            # the old implicit ["turn_idx"] default broke user configs on
-            # frames without that test-dataset column)
-            id_fields = a.get("id_fields", [])
-            if isinstance(id_fields, str):
-                id_fields = [id_fields]
-            return elapsed_join(
-                df, key, a.get("timestamp_field", "ts"),
-                start_pred=F.array_contains("tags", a["start_tag"]),
-                end_pred=F.array_contains("tags", a["end_tag"]),
-                max_lag=f"interval {timeout} seconds",
-                id_cols=id_fields)
-        if name == "metrics":
-            # logstash-filter-metrics (meta:181): meter -> windowed counts
-            # + rate; timer -> count/min/max/mean/stddev + percentiles.
-            # flush_interval (default 5s in the reference's processing-time
-            # model) becomes the event-time window size.
-            from logstash_spark.operators.windows import (metrics_timer,
-                                                          tumbling_rollup)
-            size = f'{int(a.get("flush_interval", 3600))} seconds'
-            ts_col = a.get("timestamp_field", "ts")
-            if "timer" in a:
-                (tname, tfield), = a["timer"].items() if isinstance(
-                    a["timer"], dict) else [tuple(a["timer"])]
-                if str(tfield).startswith("%{"):
-                    tfield = _sprintf_field(tfield, "metrics.timer")
-                out = metrics_timer(df, ts_col, [], tfield, size=size,
-                                    percentiles=tuple(
-                                        p / 100 for p in a.get(
-                                            "percentiles", [50, 90, 95, 99])))
-                return out.withColumn("metric_name", F.lit(tname))
-            meter = a["meter"]
-            key = _sprintf_field(meter if not isinstance(meter, list)
-                                 else meter[0], "metrics.meter")
-            secs = int(a.get("flush_interval", 3600))
-            out = tumbling_rollup(df, ts_col, size, [key],
-                                  [F.count(F.lit(1)).alias("count")])
-            return out.withColumn("rate_per_sec",
-                                  F.col("count") / F.lit(secs))
-        if name == "aggregate":
-            # logstash-filter-aggregate, timeout/push-map mode: sessionize
-            # by task_id with the standard summary aggs.  The `code` attr
-            # is arbitrary Ruby — rejected with the escape hatch pointer.
-            if "code" in a:
-                raise SyntaxError(
-                    "LSCL: aggregate.code is arbitrary Ruby; express the "
-                    "aggregation with operators/windows.session_rollup "
-                    "aggs=... in Python, or operators/custom.batch_filter "
-                    "(the Arrow-batch ruby analog)")
-            from logstash_spark.operators.windows import session_rollup
-            key = _sprintf_field(a["task_id"], "aggregate.task_id")
-            timeout = int(a.get("timeout", 1800))
-            return session_rollup(df, a.get("timeout_timestamp_field", "ts"),
-                                  key, f"{timeout} seconds")
-        raise SyntaxError(
-            f"LSCL: unsupported filter plugin {name!r} (supported: see "
-            f"logstash_spark/plans/lscl.py docstring)")
-
-    # cardinality/schema-preserving plugins are eligible for the fused
-    # (single-select) If path; drop/clone/split change row counts, and
-    # prune/de_dot rewrite the whole schema (they'd eat the fused path's
-    # snapshot columns)
-    row_local = name not in ("drop", "clone", "split", "prune", "de_dot",
-                             "metricize", "range",
-                             "throttle", "elapsed", "aggregate", "metrics")
+        return spec.build(df, a, context)
 
     if not (add_tags or remove_tags or add_fields or remove_fields):
-        return Stage(op, name, row_local=row_local)
+        return Stage(op, node.name, row_local=spec.row_local)
 
     def op_with_decorators(df: DataFrame) -> DataFrame:
-        from logstash_spark.functions.decorators import (add_field_sprintf,
-                                                         add_tag_sprintf,
-                                                         remove_field,
-                                                         remove_tag)
+        success = None
+        if failure_tags:
+            # a failure tag an earlier plugin left on the row is not this
+            # plugin's failure: compare the counts around this application
+            df = df.withColumn(_FAIL_N, _count_tags(df, failure_tags))
         out = op(df)
-        ftag = _FAILURE_TAG.get(name)
-        success = (~F.array_contains("tags", ftag)) if ftag and "tags" in out.columns else None
+        if failure_tags:
+            success = _count_tags(out, failure_tags) == F.col(_FAIL_N)
         # add_tag/add_field sprintf both key and value per event
         # (decorators.rb:28-43)
-        for t in (add_tags if isinstance(add_tags, list) else [add_tags]):
+        for t in add_tags:
             out = add_tag_sprintf(out, t, when=success)
-        for t in (remove_tags if isinstance(remove_tags, list) else [remove_tags]):
+        for t in remove_tags:
             out = remove_tag(out, t, when=success)
-        for fname, val in (add_fields or {}).items():
+        for fname, val in add_fields.items():
             out = add_field_sprintf(out, fname, str(val), when=success)
         if remove_fields:
             out = remove_field(out, *remove_fields)
-        return out
+        return out.drop(_FAIL_N) if failure_tags else out
 
-    return Stage(op_with_decorators, name, row_local=row_local)
+    return Stage(op_with_decorators, node.name, row_local=spec.row_local)
 
 
 def compile_items(nodes: list, context: dict | None = None) -> list:
-    stages = []
-    for n in nodes:
-        if isinstance(n, PluginNode):
-            stages.append(compile_plugin(n, context))
-        else:
-            stages.append(_compile_if(n, context))
-    return stages
+    return [compile_plugin(n, context) if isinstance(n, PluginNode)
+            else _compile_if(n, context) for n in nodes]
 
 
 def _compile_if(node: IfNode, context: dict | None = None) -> If:
@@ -917,7 +892,8 @@ def compile_lscl(config_text: str, context: dict | None = None) -> Pipeline:
         raise SyntaxError(
             f"LSCL: {unsupported} present — compile_lscl handles the filter "
             f"section only; use compile_lscl_job(text, ...) to run a complete "
-            f"config (generator/file/stdin inputs, file/stdout outputs)")
+            f"config (inputs: {', '.join(sorted(_INPUTS))}; outputs: "
+            f"{', '.join(sorted(_OUTPUTS))})")
     expand_sections(sections, context)
     return Pipeline(compile_items(sections.get("filter", []), context))
 
@@ -926,12 +902,13 @@ def compile_lscl(config_text: str, context: dict | None = None) -> Pipeline:
 # full-config jobs: input/output sections (SURVEY.md §2.4-2.5)
 # ---------------------------------------------------------------------------
 
-_SUPPORTED_INPUTS = frozenset({"generator", "file", "stdin",
-                               "kafka", "tcp", "syslog", "pipeline",
-                               "s3", "elasticsearch", "redis", "http",
-                               "udp", "http_poller", "beats"})
-_SUPPORTED_OUTPUTS = frozenset({"stdout", "file", "null", "elasticsearch",
-                                "tcp", "pipeline", "iceberg", "s3", "http"})
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """Several inputs union (the reference merges input queues); schemas
+    may differ, and the event model treats absent fields as null."""
+    if not dfs:
+        raise SyntaxError("LSCL: config has no input section")
+    return functools.reduce(
+        lambda x, y: x.unionByName(y, allowMissingColumns=True), dfs)
 
 
 class PipelineBus:
@@ -967,16 +944,281 @@ class PipelineBus:
                 f"LSCL: pipeline input address {address!r} has no upstream — "
                 f"run the sending job first (registered: "
                 f"{sorted(self._addresses) or 'none'})")
-        dfs = list(self._addresses[address].values())
-        out = dfs[0]
-        for d in dfs[1:]:
-            # schemas may differ between sending pipelines; the reference
-            # event model treats absent fields as null
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return _union(list(self._addresses[address].values()))
 
 
 _DEFAULT_BUS = PipelineBus()
+
+
+# -- input section: name -> _Input ------------------------------------------
+
+def _stdin(job, spark, a, stdin_df):
+    if stdin_df is None:
+        raise SyntaxError(
+            "LSCL: stdin{} input — pass stdin_df=<DataFrame with a "
+            "'message' column> to source()/run()")
+    return stdin_df
+
+
+def _generator(job, spark, a, stdin_df):
+    # reference in-core generator (Generator.java:49-87): emit `message`
+    # `count` times with a sequence number
+    count = int(a.get("count", 1) or 1)
+    msgs = _as_list(a.get("lines") or a.get("message", "Hello world!"))
+    arr = F.array(*[F.lit(m) for m in msgs])
+    return (spark.range(count * len(msgs))
+            .select((F.col("id") / len(msgs)).cast("long").alias("sequence"),
+                    F.element_at(arr, (F.col("id") % len(msgs)).cast("int") + 1)
+                    .alias("message")))
+
+
+def _file(job, spark, a, stdin_df):
+    paths, codec = _as_list(a["path"]), a.get("codec", "line")
+    if codec in ("line", "plain"):
+        # NB: list passed as ONE arg — *splat would bind the second path
+        # to the reader's wholetext/schema positional
+        return spark.read.text(paths).withColumnRenamed("value", "message")
+    if codec in ("json_lines", "json"):
+        return spark.read.json(paths)
+    if codec == "parquet":
+        return spark.read.parquet(*paths)
+    if codec == "multiline":
+        return _file_multiline(spark, paths, a)
+    raise SyntaxError(f"LSCL: unsupported file input codec {codec!r}")
+
+
+def _file_stream(job, spark, a, stdin_df):
+    """File-source streams; the schema comes from a static read of the same
+    path, so the config needs no schema block (the reference's file input
+    sniffs the first lines the same way).  Streaming file readers are
+    single-path: one stream per path, unioned (the reference's multi-path
+    file input compiles to one watcher per glob)."""
+    paths, codec = _as_list(a["path"]), a.get("codec", "line")
+    if codec in ("line", "plain"):
+        parts = [spark.readStream.text(p).withColumnRenamed("value", "message")
+                 for p in paths]
+    elif codec in ("json_lines", "json"):
+        schema = a.get("schema") or spark.read.json(paths).schema
+        parts = [spark.readStream.schema(schema).json(p) for p in paths]
+    elif codec == "parquet":
+        schema = a.get("schema") or spark.read.parquet(*paths).schema
+        parts = [spark.readStream.schema(schema).parquet(p) for p in paths]
+    else:
+        raise SyntaxError(f"LSCL: unsupported streaming file codec {codec!r}")
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _kafka(job, spark, a, stdin_df):
+    # jar-gated: kafka_source raises NotImplementedError with the exact
+    # --packages submit flag when the datasource is absent
+    topics = a.get("topics", a.get("topic"))
+    if isinstance(topics, list):
+        topics = ",".join(topics)
+    return connectors.kafka_source(
+        spark, a["bootstrap_servers"], topics,
+        codec=a.get("codec", "json_lines"), schema=a.get("schema"),
+        starting_offsets=a.get("auto_offset_reset", "latest"),
+        max_offsets_per_trigger=a.get("max_poll_records"))
+
+
+def _elasticsearch(job, spark, a, stdin_df):
+    # meta:269 logstash-input-elasticsearch: query+scroll+size
+    query = a.get("query")
+    if isinstance(query, str):
+        query = json.loads(query)
+    if not a.get("hosts"):
+        raise SyntaxError(
+            "LSCL: elasticsearch input requires hosts => [\"host:port\", ...]")
+    return batch_inputs.elasticsearch_source(
+        spark, a["hosts"], a.get("index", "logstash-*"), query=query,
+        size=int(a.get("size", 1000)), scroll=a.get("scroll", "1m"),
+        schema=a.get("schema"))
+
+
+def _redis(job, spark, a, stdin_df):
+    # meta:366 logstash-input-redis, data_type=list drain
+    if a.get("data_type", "list") != "list":
+        raise SyntaxError(
+            "LSCL: redis data_type=channel is pub/sub — a stream; use the "
+            "tcp bridging recipe (tests/test_bridges.py)")
+    return batch_inputs.redis_source_batch(
+        spark, a.get("host", "127.0.0.1"), int(a.get("port", 6379)),
+        a["key"], batch_size=int(a.get("batch_count", 10000)),
+        codec=a.get("codec", "line"), schema=a.get("schema"))
+
+
+def _tcp(job, spark, a, stdin_df):
+    return connectors.tcp_source(
+        spark, a.get("host", "127.0.0.1"), int(a["port"]),
+        codec=a.get("codec", "line"), schema=a.get("schema"))
+
+
+def _syslog(job, spark, a, stdin_df):
+    return connectors.syslog_source(spark, a.get("host", "127.0.0.1"),
+                                    int(a["port"]))
+
+
+def _s3(job, spark, a, stdin_df):
+    # meta:370 logstash-input-s3: bucket+prefix listing, codec decode
+    return batch_inputs.s3_source(spark, a["bucket"], a.get("prefix", ""),
+                                  codec=a.get("codec", "line"),
+                                  schema=a.get("schema"),
+                                  scheme=a.get("scheme", "s3a"))
+
+
+def _pipeline_in(job, spark, a, stdin_df):
+    return job.bus.listen(a["address"])
+
+
+def _poll_interval(a: dict) -> float:
+    """http_poller cadence: ``interval => seconds`` or
+    ``schedule => { every => "10s" }`` (s/m/h); 60 s by default."""
+    interval = float(a.get("interval", 0) or 0)
+    sched = a.get("schedule")
+    if not interval and isinstance(sched, dict) and sched.get("every"):
+        m = re.match(r"^(\d+(?:\.\d+)?)\s*(s|m|h)?$", str(sched["every"]))
+        if not m:
+            raise SyntaxError(
+                f"LSCL: http_poller schedule.every {sched['every']!r} — use "
+                f"e.g. \"10s\"/\"1m\"")
+        interval = float(m.group(1)) * {"s": 1, "m": 60, "h": 3600}[m.group(2) or "s"]
+    return interval or 60.0
+
+
+@dataclass(frozen=True)
+class _Input:
+    """One input plugin: ``batch``/``stream`` build its DataFrame as
+    ``(job, spark, attrs, stdin_df)``; a missing builder means the plugin
+    has no form in that mode.  ``spool`` inputs are live listeners/pollers
+    that spool events durably (sources/http_input.py); they exist only as
+    streams and are the only inputs with a global arrival order."""
+    batch: Callable | None = None
+    stream: Callable | None = None
+    spool: bool = False
+
+
+_INPUTS: dict[str, _Input] = {
+    "generator": _Input(batch=_generator),
+    "file": _Input(_file, _file_stream),
+    "stdin": _Input(_stdin, _stdin),   # stdin_df may be a streaming frame
+    "kafka": _Input(_kafka, _kafka),
+    "tcp": _Input(_tcp, _tcp),
+    "syslog": _Input(_syslog, _syslog),
+    "pipeline": _Input(_pipeline_in, _pipeline_in),
+    "s3": _Input(batch=_s3),
+    "elasticsearch": _Input(batch=_elasticsearch),
+    "redis": _Input(batch=_redis),
+    "http": _Input(spool=True),
+    "udp": _Input(spool=True),
+    "http_poller": _Input(spool=True),
+    "beats": _Input(spool=True),
+}
+
+
+# -- output section: name -> _Output ----------------------------------------
+# A writer is (job, df, attrs, epoch_id, run_token): epoch_id is None for a
+# batch run and the foreachBatch id for a micro-batch frame.
+
+def _discard(job, df, a, epoch_id, run_token):
+    pass  # stdout/null: row-printing/discard sinks have no plan effect
+
+
+def _pipeline_out(job, df, a, epoch_id, run_token):
+    for addr in _as_list(a["send_to"]):
+        job.bus.send(addr, df, sender=job._bus_identity)
+
+
+def _file_out(job, df, a, epoch_id, run_token):
+    # a micro-batch APPENDS: a batch run's overwrite would clobber the
+    # earlier batches
+    df, codec = strip_metadata(df), a.get("codec", "json_lines")
+    if codec in ("line", "plain"):
+        df = df.select(F.col(a.get("message_field", "message"))
+                       .cast("string").alias("value"))
+    writer = df.write.mode("overwrite" if epoch_id is None else "append")
+    if codec == "json_lines":
+        writer.json(a["path"])
+    elif codec in ("line", "plain"):
+        writer.text(a["path"])
+    elif codec == "csv":
+        writer.option("header", "true").csv(a["path"])
+    elif codec == "parquet":
+        writer.parquet(a["path"])
+    else:
+        raise SyntaxError(f"LSCL: unsupported file output codec {codec!r}")
+
+
+def _elasticsearch_out(job, df, a, epoch_id, run_token):
+    connectors.elasticsearch_sink(df, index=a.get("index", "logstash"),
+                                  id_col=a["document_id"], path=a.get("path"),
+                                  nodes=a.get("hosts"))
+
+
+def _tcp_out(job, df, a, epoch_id, run_token):
+    connectors.tcp_sink(strip_metadata(df), a["host"], a["port"],
+                        message_col=a.get("message_field"))
+
+
+def _s3_out(job, df, a, epoch_id, run_token):
+    # logstash-output-s3: distributed write replaces temp-file rotation
+    # (time_file/size_file have no analog — see s3_sink).  A micro-batch
+    # gets one directory per epoch, written with overwrite: a retried
+    # foreachBatch epoch (driver restart mid-commit) rewrites its OWN
+    # epoch_id=N directory instead of appending duplicate objects —
+    # epoch-idempotent, so the sink is exactly-once for readers that list
+    # the whole prefix (same contract as sinks/exactly_once.py's batch_id
+    # layout).  Earlier batches live in sibling directories.
+    prefix = a.get("prefix", "")
+    if epoch_id is not None:
+        run_part = f"run={run_token}/" if run_token else ""
+        epoch_part = f"{run_part}epoch_id={epoch_id}"
+        prefix = f"{prefix.rstrip('/')}/{epoch_part}" if prefix else epoch_part
+    connectors.s3_sink(
+        df, a["bucket"], prefix, codec=a.get("codec", "json_lines"),
+        scheme=a.get("scheme", "s3a"),
+        compression="gzip" if a.get("encoding") == "gzip" else None,
+        message_col=a.get("message_field"))
+
+
+def _http_out(job, df, a, epoch_id, run_token):
+    # logstash-output-http: json/json_batch/ndjson executor POSTs
+    connectors.http_sink(strip_metadata(df), a["url"],
+                         format=a.get("format", "json_batch"),
+                         batch_size=int(a.get("batch_size", 50)),
+                         content_type=a.get("content_type"),
+                         retries=int(a.get("automatic_retries", 2)))
+
+
+def _iceberg_out(job, df, a, epoch_id, run_token):
+    # jar-gated: the north rule's table format — exactly-once MERGE on
+    # merge_keys; raises the exact submit recipe without the jar
+    keys = _as_list(a.get("merge_keys", a.get("document_id")))
+    connectors.iceberg_merge_sink(a["table"], keys)(strip_metadata(df),
+                                                    epoch_id or 0)
+
+
+@dataclass(frozen=True)
+class _Output:
+    """One output plugin: its writer, and — for an output with no
+    streaming form — what to use in streaming instead."""
+    write: Callable
+    stream_twin: str | None = None
+
+
+_OUTPUTS: dict[str, _Output] = {
+    "stdout": _Output(_discard),
+    "null": _Output(_discard),
+    "pipeline": _Output(
+        _pipeline_out,
+        stream_twin="a durable bus table (streaming/jobs.run_parse_to_bus) "
+                    "instead of the in-plan bus"),
+    "file": _Output(_file_out),
+    "elasticsearch": _Output(_elasticsearch_out),
+    "tcp": _Output(_tcp_out),
+    "s3": _Output(_s3_out),
+    "http": _Output(_http_out),
+    "iceberg": _Output(_iceberg_out),
+}
 
 
 class LsclJob:
@@ -998,7 +1240,7 @@ class LsclJob:
         self.context = context or {}
         self.inputs = sections.get("input", [])
         self.outputs = sections.get("output", [])
-        # live HTTP listeners started by source_stream (http inputs);
+        # live listeners/pollers started by source_stream (spool inputs);
         # callers stop them after the query terminates
         self.http_spools: list = []
         self._ordered = False  # set by run_stream(ordered=True)
@@ -1007,33 +1249,24 @@ class LsclJob:
         # stale copy.  A pipelines.yml job is keyed by its pipeline.id, so
         # two pipelines with identical config text both fan in; a bare
         # config falls back to a deterministic digest of its AST
-        if pipeline_id is not None:
-            self._bus_identity = pipeline_id
-        else:
-            import hashlib as _hashlib
-
-            self._bus_identity = _hashlib.md5(
-                repr(sections).encode()).hexdigest()
+        self._bus_identity = (pipeline_id if pipeline_id is not None else
+                              hashlib.md5(repr(sections).encode()).hexdigest())
         self.filter_nodes = sections.get("filter", [])
-        self.pipeline = Pipeline(compile_items(sections.get("filter", []),
-                                               self.context))
+        self.pipeline = Pipeline(compile_items(self.filter_nodes, self.context))
         for n in self.inputs:
-            if not isinstance(n, PluginNode) or n.name not in _SUPPORTED_INPUTS:
+            if not isinstance(n, PluginNode) or n.name not in _INPUTS:
                 raise SyntaxError(
                     f"LSCL: unsupported input {getattr(n, 'name', n)!r} "
-                    f"(supported: {', '.join(sorted(_SUPPORTED_INPUTS))})")
-        for n in self.outputs:
-            if isinstance(n, IfNode):
-                continue
-            if n.name not in _SUPPORTED_OUTPUTS:
-                raise SyntaxError(
-                    f"LSCL: unsupported output {n.name!r} "
-                    f"(supported: {', '.join(sorted(_SUPPORTED_OUTPUTS))})")
+                    f"(supported: {', '.join(sorted(_INPUTS))})")
         # each s3 output writes run=<token>/epoch_id=N under its prefix with
         # overwrite, so a second output on the same bucket+prefix would
         # silently replace the first one's epochs
         s3_targets = set()
         for n in walk_plugins(self.outputs):
+            if n.name not in _OUTPUTS:
+                raise SyntaxError(
+                    f"LSCL: unsupported output {n.name!r} "
+                    f"(supported: {', '.join(sorted(_OUTPUTS))})")
             if n.name != "s3":
                 continue
             target = (n.attrs.get("bucket"),
@@ -1049,222 +1282,46 @@ class LsclJob:
     def source(self, spark, stdin_df: DataFrame | None = None) -> DataFrame:
         dfs = []
         for n in self.inputs:
-            dfs.append(self._one_source(spark, n, stdin_df))
-        if not dfs:
-            raise SyntaxError("LSCL: config has no input section")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+            build = _INPUTS[n.name].batch
+            if build is None:
+                raise SyntaxError(
+                    f"LSCL: {n.name}{{}} is a live listener/poller — a "
+                    "stream; run this config with run_stream (batch has no "
+                    "arrival semantics to replay)")
+            dfs.append(build(self, spark, n.attrs, stdin_df))
+        return _union(dfs)
 
     @property
     def bus(self) -> PipelineBus:
         return self.context.get("bus") or _DEFAULT_BUS
 
-    def _one_source(self, spark, n: PluginNode, stdin_df) -> DataFrame:
-        a = n.attrs
-        if n.name in ("http", "udp", "http_poller", "beats"):
-            raise SyntaxError(
-                f"LSCL: {n.name}{{}} is a live listener/poller — a stream; "
-                "run this config with run_stream (batch has no arrival "
-                "semantics to replay)")
-        if n.name == "pipeline":
-            return self.bus.listen(a["address"])
-        if n.name == "kafka":
-            # jar-gated: kafka_source raises NotImplementedError with the
-            # exact --packages submit flag when the datasource is absent
-            from logstash_spark.sources.connectors import kafka_source
-
-            topics = a.get("topics", a.get("topic"))
-            if isinstance(topics, list):
-                topics = ",".join(topics)
-            return kafka_source(
-                spark, a["bootstrap_servers"], topics,
-                codec=a.get("codec", "json_lines"),
-                schema=a.get("schema"),
-                starting_offsets=a.get("auto_offset_reset", "latest"),
-                max_offsets_per_trigger=a.get("max_poll_records"))
-        if n.name == "tcp":
-            from logstash_spark.sources.connectors import tcp_source
-
-            return tcp_source(spark, a.get("host", "127.0.0.1"),
-                              int(a["port"]), codec=a.get("codec", "line"),
-                              schema=a.get("schema"))
-        if n.name == "syslog":
-            from logstash_spark.sources.connectors import syslog_source
-
-            return syslog_source(spark, a.get("host", "127.0.0.1"),
-                                 int(a["port"]))
-        if n.name == "s3":
-            # meta:370 logstash-input-s3: bucket+prefix listing, codec decode
-            from logstash_spark.sources.batch_inputs import s3_source
-
-            return s3_source(spark, a["bucket"], a.get("prefix", ""),
-                             codec=a.get("codec", "line"),
-                             schema=a.get("schema"),
-                             scheme=a.get("scheme", "s3a"))
-        if n.name == "elasticsearch":
-            # meta:269 logstash-input-elasticsearch: query+scroll+size
-            import json as _json
-
-            from logstash_spark.sources.batch_inputs import \
-                elasticsearch_source
-
-            query = a.get("query")
-            if isinstance(query, str):
-                query = _json.loads(query)
-            if not a.get("hosts"):
-                raise SyntaxError(
-                    "LSCL: elasticsearch input requires hosts => "
-                    "[\"host:port\", ...]")
-            return elasticsearch_source(
-                spark, a["hosts"],
-                a.get("index", "logstash-*"), query=query,
-                size=int(a.get("size", 1000)),
-                scroll=a.get("scroll", "1m"), schema=a.get("schema"))
-        if n.name == "redis":
-            # meta:366 logstash-input-redis, data_type=list drain
-            from logstash_spark.sources.batch_inputs import redis_source_batch
-
-            if a.get("data_type", "list") != "list":
-                raise SyntaxError(
-                    "LSCL: redis data_type=channel is pub/sub — a stream; "
-                    "use the tcp bridging recipe (tests/test_bridges.py)")
-            return redis_source_batch(
-                spark, a.get("host", "127.0.0.1"), int(a.get("port", 6379)),
-                a["key"], batch_size=int(a.get("batch_count", 10000)),
-                codec=a.get("codec", "line"), schema=a.get("schema"))
-        if n.name == "stdin":
-            if stdin_df is None:
-                raise SyntaxError(
-                    "LSCL: stdin{} input — pass stdin_df=<DataFrame with a "
-                    "'message' column> to source()/run()")
-            return stdin_df
-        if n.name == "generator":
-            # reference in-core generator (Generator.java:49-87): emit
-            # `message` `count` times with a sequence number
-            count = int(a.get("count", 1) or 1)
-            msgs = a.get("lines") or [a.get("message", "Hello world!")]
-            if not isinstance(msgs, list):
-                msgs = [msgs]
-            arr = F.array(*[F.lit(m) for m in msgs])
-            return (spark.range(count * len(msgs))
-                    .select((F.col("id") / len(msgs)).cast("long").alias("sequence"),
-                            F.element_at(arr, (F.col("id") % len(msgs)).cast("int") + 1)
-                            .alias("message")))
-        if n.name == "file":
-            paths = a["path"] if isinstance(a["path"], list) else [a["path"]]
-            codec = a.get("codec", "line")
-            if codec in ("line", "plain"):
-                # NB: list passed as ONE arg — *splat would bind the second
-                # path to the reader's wholetext/schema positional
-                return spark.read.text(paths).withColumnRenamed("value", "message")
-            if codec == "json_lines" or codec == "json":
-                return spark.read.json(paths)
-            if codec == "parquet":
-                return spark.read.parquet(*paths)
-            if codec == "multiline":
-                return _file_multiline(spark, paths, a)
-            raise SyntaxError(f"LSCL: unsupported file input codec {codec!r}")
-        raise AssertionError(n.name)
-
     # -- output section ---------------------------------------------------------
 
     def apply_outputs(self, df: DataFrame) -> DataFrame:
         for n in self.outputs:
-            self._one_output(df, n)
+            self._one_output_batch(df, n)
         return df
 
-    def _one_output(self, df: DataFrame, n) -> None:
+    def _one_output_batch(self, df: DataFrame, n,
+                          epoch_id: int | None = None,
+                          run_token: str | None = None) -> None:
+        """Deliver ``df`` to one output node.  ``epoch_id`` is None for a
+        batch run and the foreachBatch batch id for a micro-batch frame
+        (a micro-batch frame IS a batch DataFrame, so the writers are
+        shared); ``run_token`` scopes the s3 epoch directories."""
         if isinstance(n, IfNode):
             # conditional routing in the output section: filter per branch
             remaining = df
             for expr, body in n.branches:
                 pred = compile_expr(expr, df)
                 for inner in body:
-                    self._one_output(remaining.filter(pred), inner)
+                    self._one_output_batch(remaining.filter(pred), inner,
+                                           epoch_id, run_token)
                 remaining = remaining.filter(~F.coalesce(pred, F.lit(False)))
             for inner in (n.else_nodes or []):
-                self._one_output(remaining, inner)
+                self._one_output_batch(remaining, inner, epoch_id, run_token)
             return
-        a = n.attrs
-        if n.name in ("stdout", "null"):
-            return  # row-printing/discard sinks: no plan effect in batch
-        if n.name == "pipeline":
-            addrs = a["send_to"]
-            if not isinstance(addrs, list):
-                addrs = [addrs]
-            for addr in addrs:
-                self.bus.send(addr, df, sender=self._bus_identity)
-            return
-        if n.name == "file":
-            from logstash_spark.functions.decorators import strip_metadata
-
-            df = strip_metadata(df)  # @metadata excluded from outputs
-            codec = a.get("codec", "json_lines")
-            path = a["path"]
-            writer = df.write.mode("overwrite")
-            if codec == "json_lines":
-                writer.json(path)
-            elif codec in ("line", "plain"):
-                col = a.get("message_field", "message")
-                df.select(F.col(col).cast("string").alias("value")) \
-                  .write.mode("overwrite").text(path)
-            elif codec == "csv":
-                writer.option("header", "true").csv(path)
-            elif codec == "parquet":
-                writer.parquet(path)
-            else:
-                raise SyntaxError(f"LSCL: unsupported file output codec {codec!r}")
-            return
-        if n.name == "elasticsearch":
-            from logstash_spark.sources.connectors import elasticsearch_sink
-
-            elasticsearch_sink(df, index=a.get("index", "logstash"),
-                               id_col=a["document_id"],
-                               path=a.get("path"), nodes=a.get("hosts"))
-            return
-        if n.name == "tcp":
-            from logstash_spark.functions.decorators import strip_metadata
-            from logstash_spark.sources.connectors import tcp_sink
-
-            tcp_sink(strip_metadata(df), a["host"], a["port"],
-                     message_col=a.get("message_field"))
-            return
-        if n.name == "s3":
-            # logstash-output-s3: distributed write replaces temp-file
-            # rotation (time_file/size_file have no analog — see s3_sink)
-            from logstash_spark.sources.connectors import s3_sink
-
-            s3_sink(df, a["bucket"], a.get("prefix", ""),
-                    codec=a.get("codec", "json_lines"),
-                    scheme=a.get("scheme", "s3a"),
-                    compression="gzip" if a.get("encoding") == "gzip" else None,
-                    message_col=a.get("message_field"))
-            return
-        if n.name == "http":
-            # logstash-output-http: json/json_batch/ndjson executor POSTs
-            from logstash_spark.functions.decorators import strip_metadata
-            from logstash_spark.sources.connectors import http_sink
-
-            http_sink(strip_metadata(df), a["url"],
-                      format=a.get("format", "json_batch"),
-                      batch_size=int(a.get("batch_size", 50)),
-                      content_type=a.get("content_type"),
-                      retries=int(a.get("automatic_retries", 2)))
-            return
-        if n.name == "iceberg":
-            # jar-gated: the north rule's table format — exactly-once MERGE
-            # on merge_keys; raises the exact submit recipe without the jar
-            from logstash_spark.functions.decorators import strip_metadata
-            from logstash_spark.sources.connectors import iceberg_merge_sink
-
-            keys = a.get("merge_keys", a.get("document_id"))
-            if not isinstance(keys, list):
-                keys = [keys]
-            iceberg_merge_sink(a["table"], keys)(strip_metadata(df), 0)
-            return
-        raise AssertionError(n.name)
+        _OUTPUTS[n.name].write(self, df, n.attrs, epoch_id, run_token)
 
     # -- end to end ---------------------------------------------------------------
 
@@ -1277,85 +1334,43 @@ class LsclJob:
     def source_stream(self, spark, stdin_df: DataFrame | None = None) -> DataFrame:
         """Streaming variant of :meth:`source`.
 
-        file inputs become file-source streams (schema taken from a static
-        read of the same path, so the config needs no schema block — same
-        trick the reference's file input uses by sniffing the first lines);
-        kafka/tcp/syslog are already streams; stdin accepts a streaming
-        DataFrame; generator has no bounded streaming analog (use the rate
-        source directly).  Multiple inputs union like the batch path.
+        Each input's stream builder runs (stdin accepts a streaming
+        DataFrame); an input with none is a bounded batch read and is
+        rejected, since a batch frame cannot union with a stream.  Spool
+        inputs start their listener here.  Multiple inputs union like the
+        batch path.
         """
         dfs = []
         spool_dirs_seen: set[str] = set()
         for n in self.inputs:
-            a = n.attrs
-            if n.name == "file":
-                paths = a["path"] if isinstance(a["path"], list) else [a["path"]]
-                codec = a.get("codec", "line")
-                # streaming file readers are single-path: one stream per
-                # path, unioned (same plan the reference's multi-path file
-                # input compiles to — one watcher per glob)
-                if codec in ("line", "plain"):
-                    parts = [spark.readStream.text(p0)
-                             .withColumnRenamed("value", "message")
-                             for p0 in paths]
-                elif codec in ("json_lines", "json"):
-                    schema = a.get("schema") or spark.read.json(paths).schema
-                    parts = [spark.readStream.schema(schema).json(p0)
-                             for p0 in paths]
-                elif codec == "parquet":
-                    schema = a.get("schema") or spark.read.parquet(*paths).schema
-                    parts = [spark.readStream.schema(schema).parquet(p0)
-                             for p0 in paths]
-                else:
-                    raise SyntaxError(
-                        f"LSCL: unsupported streaming file codec {codec!r}")
-                d = parts[0]
-                for extra in parts[1:]:
-                    d = d.unionByName(extra)
-                dfs.append(d)
-            elif n.name == "generator":
-                raise SyntaxError(
-                    "LSCL: generator{} is a bounded batch input; for a "
-                    "streaming load source use spark.readStream.format('rate')")
-            elif n.name == "beats":
-                # logstash-input-beats (meta:248): a real lumberjack v2
-                # listener — window/compressed/json frames, spool-then-ack
-                # durability ordering (sources/beats_input.py).
+            spec, a = _INPUTS[n.name], n.attrs
+            if spec.spool:
+                # http (meta:310) / udp (meta:404) listeners, the beats
+                # lumberjack v2 listener (meta:248, spool-then-ack) and the
+                # http_poller (meta:314) scheduled GETs all spool events;
+                # the Python Data Source replays spool line-ranges as
+                # offsets
                 from logstash_spark.sources.beats_input import BeatsSpool
-                from logstash_spark.sources.http_input import \
-                    http_webhook_stream
-
-                if "spool_dir" not in a:
-                    raise SyntaxError(
-                        "LSCL: beats input requires spool_dir => \"...\"")
-                spool = BeatsSpool(
-                    a["spool_dir"], host=a.get("host", "127.0.0.1"),
-                    port=int(a.get("port", 0))).start()
-                self.http_spools.append(spool)
-                if a["spool_dir"] not in spool_dirs_seen:
-                    spool_dirs_seen.add(a["spool_dir"])
-                    dfs.append(http_webhook_stream(
-                        spark, a["spool_dir"],
-                        include_seq=self._ordered))
-            elif n.name in ("http", "udp"):
-                # logstash-input-http (meta:310) / -udp (meta:404): real
-                # in-engine push sources — the listener spools requests /
-                # datagrams, the Python Data Source replays spool
-                # line-ranges as offsets.  Replaces the bridge recipes
-                # (tests/test_bridges.py, r4).
                 from logstash_spark.sources.http_input import (
-                    HttpEventSpool, UdpEventSpool, http_webhook_stream)
+                    HttpEventSpool, HttpPollerSpool, UdpEventSpool,
+                    http_webhook_stream)
 
-                if "spool_dir" not in a:
+                cls = {"http": HttpEventSpool, "udp": UdpEventSpool,
+                       "beats": BeatsSpool,
+                       "http_poller": HttpPollerSpool}[n.name]
+                poller = cls is HttpPollerSpool
+                if "spool_dir" not in a or poller and "urls" not in a:
                     raise SyntaxError(
-                        f"LSCL: {n.name} input requires spool_dir => "
-                        "\"...\" — the durable spool is what makes the "
-                        "stream checkpoint/resumable")
-                cls = HttpEventSpool if n.name == "http" else UdpEventSpool
-                spool = cls(
-                    a["spool_dir"], host=a.get("host", "127.0.0.1"),
-                    port=int(a.get("port", 0))).start()
-                self.http_spools.append(spool)
+                        f"LSCL: {n.name} input requires spool_dir => \"...\""
+                        + (" and urls => {...}" if poller else "")
+                        + " — the durable spool is what makes the stream "
+                        "checkpoint/resumable")
+                spool = (cls(a["spool_dir"], a["urls"],
+                             interval=_poll_interval(a)) if poller
+                         else cls(a["spool_dir"],
+                                  host=a.get("host", "127.0.0.1"),
+                                  port=int(a.get("port", 0))))
+                self.http_spools.append(spool.start())
                 # several listeners may share one spool (their events
                 # interleave in arrival order); exactly ONE reader per
                 # spool dir — a second stream over the same dir would
@@ -1364,49 +1379,16 @@ class LsclJob:
                     spool_dirs_seen.add(a["spool_dir"])
                     dfs.append(http_webhook_stream(
                         spark, a["spool_dir"],
-                        prune_committed=bool(a.get("prune_committed",
-                                                   False)),
+                        prune_committed=bool(a.get("prune_committed", False)),
                         include_seq=self._ordered))
-            elif n.name == "http_poller":
-                # logstash-input-http_poller (meta:314): scheduled GETs of
-                # a url set, one event per poll per url, via the same
-                # replayable spool.  schedule => { every => "10s" } or
-                # interval => seconds.
-                from logstash_spark.sources.http_input import (
-                    HttpPollerSpool, http_webhook_stream)
-
-                if "spool_dir" not in a or "urls" not in a:
-                    raise SyntaxError(
-                        "LSCL: http_poller input requires urls => {...} "
-                        "and spool_dir => \"...\"")
-                interval = float(a.get("interval", 0) or 0)
-                sched = a.get("schedule")
-                if not interval and isinstance(sched, dict) \
-                        and sched.get("every"):
-                    m = re.match(r"^(\d+(?:\.\d+)?)\s*(s|m|h)?$",
-                                 str(sched["every"]))
-                    if not m:
-                        raise SyntaxError(
-                            f"LSCL: http_poller schedule.every "
-                            f"{sched['every']!r} — use e.g. \"10s\"/\"1m\"")
-                    interval = float(m.group(1)) * \
-                        {"s": 1, "m": 60, "h": 3600}[m.group(2) or "s"]
-                spool = HttpPollerSpool(
-                    a["spool_dir"], a["urls"],
-                    interval=interval or 60.0).start()
-                if a["spool_dir"] not in spool_dirs_seen:
-                    spool_dirs_seen.add(a["spool_dir"])
-                    dfs.append(http_webhook_stream(
-                        spark, a["spool_dir"],
-                        include_seq=self._ordered))
-                self.http_spools.append(spool)
+            elif spec.stream is None:
+                raise SyntaxError(
+                    f"LSCL: {n.name}{{}} is a bounded batch input; run this "
+                    "config with run() (for a streaming load source use "
+                    "spark.readStream.format('rate'))")
             else:
-                dfs.append(self._one_source(spark, n, stdin_df))
-        if not dfs:
-            raise SyntaxError("LSCL: config has no input section")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
+                dfs.append(spec.stream(self, spark, a, stdin_df))
+        out = _union(dfs)
         if not out.isStreaming:
             raise SyntaxError(
                 "LSCL: source_stream needs at least one streaming input "
@@ -1431,36 +1413,18 @@ class LsclJob:
         StreamingQuery; checkpointing gives the usual kill/resume +
         exactly-once-per-sink-idempotency contract.
         """
-        for n in self.outputs:
-            if isinstance(n, PluginNode) and n.name == "pipeline":
+        for n in walk_plugins(self.outputs):
+            twin = _OUTPUTS[n.name].stream_twin
+            if twin:
                 raise SyntaxError(
-                    "LSCL: pipeline{} output in streaming mode — use a "
-                    "durable bus table (streaming/jobs.run_parse_to_bus) "
-                    "instead of the in-plan bus")
-        # the batch shapes of the stateful plugins (ranking window, plain
-        # time-bounded join, un-watermarked session groupBy) are not legal
-        # in a streaming plan; fail at submit with the streaming twins
-        _STREAM_TWINS = {
-            "throttle": "streaming/stateful.throttle_stream",
-            "elapsed": "streaming/jobs.elapsed_stream_join",
-            "aggregate": "streaming/jobs.session_rollup_stream "
-                         "(or streaming/stateful.aggregate_stateful_stream)",
-            "metrics": "streaming/jobs.rollup_stream",
-        }
-
-        def _walk(nodes):
-            for fn in nodes:
-                if isinstance(fn, IfNode):
-                    for _, body in fn.branches:
-                        _walk(body)
-                    _walk(fn.else_nodes or [])
-                elif fn.name in _STREAM_TWINS:
-                    raise SyntaxError(
-                        f"LSCL: {fn.name}{{}} uses a batch-only plan shape; "
-                        f"in streaming compose {_STREAM_TWINS[fn.name]} "
-                        f"around the stateless part of this config")
-
-        _walk(self.filter_nodes)
+                    f"LSCL: {n.name}{{}} output in streaming mode — use {twin}")
+        for n in walk_plugins(self.filter_nodes):
+            twin = _FILTERS[n.name].stream_twin
+            if twin:
+                raise SyntaxError(
+                    f"LSCL: {n.name}{{}} uses a batch-only plan shape; in "
+                    f"streaming compose {twin} around the stateless part of "
+                    "this config")
         # pipeline.ordered analog (logstash.yml pipeline.ordered=true: one
         # worker, events keep input order end-to-end).  Arrival order is
         # only well-defined for the spool-backed push inputs, whose global
@@ -1471,17 +1435,15 @@ class LsclJob:
         # contract there stays sink-side sorting on event time.
         self._ordered = ordered
         if ordered:
-            spoolable = {"http", "udp", "http_poller", "beats"}
-            bad = [n.name for n in self.inputs
-                   if isinstance(n, PluginNode) and n.name not in spoolable]
+            bad = [n.name for n in self.inputs if not _INPUTS[n.name].spool]
             if bad:
+                spoolable = "/".join(k for k, v in _INPUTS.items() if v.spool)
                 raise SyntaxError(
                     f"LSCL: ordered=True needs spool-backed inputs "
-                    f"(http/udp/http_poller/beats); {bad} have no global "
-                    "arrival order — sort at the sink on event time "
-                    "instead (SURVEY ordered-execution contract)")
-            dirs = {n.attrs.get("spool_dir") for n in self.inputs
-                    if isinstance(n, PluginNode)}
+                    f"({spoolable}); {bad} have no global arrival order — "
+                    "sort at the sink on event time instead (SURVEY "
+                    "ordered-execution contract)")
+            dirs = {n.attrs.get("spool_dir") for n in self.inputs}
             if len(dirs) > 1:
                 raise SyntaxError(
                     "LSCL: ordered=True with multiple spool_dirs — each "
@@ -1497,11 +1459,8 @@ class LsclJob:
         # overwrite a previous run's epoch_id=0 objects — while a driver
         # restart RESUMING the same checkpoint keeps the same token and
         # its retried epochs overwrite their own directories (idempotent).
-        import hashlib as _hashlib
-        import os as _os
-
-        run_token = _hashlib.md5(
-            _os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+        run_token = hashlib.md5(
+            os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
         def deliver(batch_df, batch_id):
             if ordered:
@@ -1525,72 +1484,6 @@ class LsclJob:
             w = w.trigger(processingTime=trigger_interval)
         return w.start()
 
-    def _one_output_batch(self, df: DataFrame, n,
-                          epoch_id: int | None = None,
-                          run_token: str | None = None) -> None:
-        """Per-micro-batch output delivery: file appends, others reuse the
-        batch writers (the micro-batch frame IS a batch DataFrame).
-        ``epoch_id`` is the foreachBatch batch id, used by sinks that can
-        make a retried epoch idempotent (s3)."""
-        if isinstance(n, IfNode):
-            remaining = df
-            for expr, body in n.branches:
-                pred = compile_expr(expr, df)
-                for inner in body:
-                    self._one_output_batch(remaining.filter(pred), inner,
-                                           epoch_id=epoch_id,
-                                           run_token=run_token)
-                remaining = remaining.filter(~F.coalesce(pred, F.lit(False)))
-            for inner in (n.else_nodes or []):
-                self._one_output_batch(remaining, inner, epoch_id=epoch_id,
-                                       run_token=run_token)
-            return
-        if n.name == "file":
-            from logstash_spark.functions.decorators import strip_metadata
-
-            a = n.attrs
-            clean = strip_metadata(df)
-            codec = a.get("codec", "json_lines")
-            writer = clean.write.mode("append")
-            if codec == "json_lines":
-                writer.json(a["path"])
-            elif codec in ("line", "plain"):
-                col = a.get("message_field", "message")
-                clean.select(F.col(col).cast("string").alias("value")) \
-                     .write.mode("append").text(a["path"])
-            elif codec == "csv":
-                writer.option("header", "true").csv(a["path"])
-            elif codec == "parquet":
-                writer.parquet(a["path"])
-            else:
-                raise SyntaxError(f"LSCL: unsupported file output codec {codec!r}")
-            return
-        if n.name == "s3":
-            # One directory per epoch, written with overwrite: a retried
-            # foreachBatch epoch (driver restart mid-commit) rewrites its
-            # OWN epoch_id=N directory instead of appending duplicate
-            # objects — epoch-idempotent, so the sink is exactly-once for
-            # readers that list the whole prefix (same contract as
-            # sinks/exactly_once.py's batch_id layout).  Earlier batches
-            # live in sibling directories and are never clobbered.
-            from logstash_spark.sources.connectors import s3_sink
-
-            a = n.attrs
-            prefix = a.get("prefix", "")
-            if epoch_id is not None:
-                run_part = f"run={run_token}/" if run_token else ""
-                epoch_part = f"{run_part}epoch_id={epoch_id}"
-                prefix = f"{prefix.rstrip('/')}/{epoch_part}" \
-                    if prefix else epoch_part
-            s3_sink(df, a["bucket"], prefix,
-                    codec=a.get("codec", "json_lines"),
-                    scheme=a.get("scheme", "s3a"),
-                    compression="gzip" if a.get("encoding") == "gzip" else None,
-                    message_col=a.get("message_field"),
-                    mode="overwrite" if epoch_id is not None else "append")
-            return
-        self._one_output(df, n)  # stdout/null/es/tcp/http: batch writers apply
-
 
 def _file_multiline(spark, paths: list[str], a: dict) -> DataFrame:
     """file input with the multiline codec: fold continuation lines into
@@ -1606,10 +1499,6 @@ def _file_multiline(spark, paths: list[str], a: dict) -> DataFrame:
     exactly the reference file-input x multiline-codec contract: each
     watched file carries its own codec instance).
     """
-    from pyspark.sql.window import Window
-
-    from logstash_spark.operators.codecs import multiline_assemble
-
     lines = spark.read.text(paths).select(
         F.col("value").alias("message"),
         F.col("_metadata.file_path").alias("path"),
@@ -1617,7 +1506,7 @@ def _file_multiline(spark, paths: list[str], a: dict) -> DataFrame:
         F.monotonically_increasing_id().alias("__mid"))
     w = Window.partitionBy("path").orderBy("__blk", "__mid")
     lines = lines.withColumn("__line_no", F.row_number().over(w))
-    out = multiline_assemble(
+    out = codecs.multiline_assemble(
         lines, "message", "path", "__line_no",
         pattern=a["pattern"], negate=bool(a.get("negate", False)),
         what=a.get("what", "previous"))

@@ -117,14 +117,61 @@ def test_mutate_gsub_convert_and_decorators(spark):
     assert all(r["engine"] == "spark" for r in out)
 
 
-def test_grok_decorator_only_on_success(spark):
+_NUM_GROK = 'grok { match => { "text" => "num=%{INT:num:int}" } '
+
+
+@pytest.mark.parametrize("cfg, failure_tag", [
+    ('filter { ' + _NUM_GROK + 'add_tag => ["parsed"] } }',
+     "_grokparsefailure"),
+    # a configured tag_on_failure is what marks this grok's failure
+    ('filter { ' + _NUM_GROK + 'tag_on_failure => "_custom" '
+     'add_tag => ["parsed"] } }', "_custom"),
+    # an earlier grok's failure tag on "num=5" is not this grok's failure
+    ('filter { grok { match => { "text" => "^garbage$" } } '
+     + _NUM_GROK + 'add_tag => ["parsed"] } }', "_grokparsefailure"),
+], ids=["default_tag", "custom_tag", "earlier_failure"])
+def test_grok_decorator_only_on_success(spark, cfg, failure_tag):
     df = spark.createDataFrame([("num=5",), ("garbage",)], "text string")
-    cfg = ('filter { grok { match => { "text" => "num=%{INT:num:int}" } '
-           'add_tag => ["parsed"] } }')
     out = {r["text"]: (r["tags"] or []) for r in compile_lscl(cfg)(df).collect()}
     assert "parsed" in out["num=5"]
     assert "parsed" not in out["garbage"]
-    assert "_grokparsefailure" in out["garbage"]
+    assert failure_tag in out["garbage"]
+
+
+def test_tag_on_failure_array_form(spark):
+    """tag_on_failure is an :array option: every listed tag is added on
+    failure, for grok and for jdbc_static/lookup misses."""
+    df = spark.createDataFrame([("num=5", "sql"), ("garbage", "vim")],
+                               "text string, tool string")
+    dim = spark.createDataFrame([("sql", "data")], "tool string, cat string")
+    cfg = ('filter { ' + _NUM_GROK + 'tag_on_failure => ["_a", "_b"] '
+           'add_tag => ["parsed"] } '
+           'jdbc_static { source => "tool" fetch => { "cat" => "cat" } '
+           'tag_on_failure => ["_miss"] } }')
+    out = {r["text"]: r["tags"]
+           for r in compile_lscl(cfg, {"lookup_dim": dim})(df).collect()}
+    assert out["num=5"] == ["parsed"]
+    assert out["garbage"] == ["_a", "_b", "_miss"]
+
+
+@pytest.mark.parametrize("plugin, attrs, hit, failure_tag", [
+    ("dns", 'resolve => ["host"]', "h.example", "_dnsfailure"),
+    ("geoip", 'source => "host"', "10.0.0.1", "_geoip_lookup_failure"),
+])
+def test_lookup_decorators_only_on_hit(spark, plugin, attrs, hit,
+                                       failure_tag):
+    """dns/geoip tag a miss with their failure tag; the miss is not the
+    plugin's success, so its add_tag does not fire there."""
+    from logstash_spark.operators.enrich import cidr_blocks_df
+
+    df = spark.createDataFrame([("a", hit), ("b", "192.168.0.1")],
+                               "id string, host string")
+    ctx = {"dns_records": spark.createDataFrame(
+               [("h.example", "10.0.0.1")], "name string, address string"),
+           "geoip_blocks": cidr_blocks_df(spark, [("10.0.0.0/8", "US", "nyc")])}
+    cfg = f'filter {{ {plugin} {{ {attrs} add_tag => ["hit"] }} }}'
+    out = {r.id: r.tags for r in compile_lscl(cfg, ctx)(df).collect()}
+    assert out == {"a": ["hit"], "b": [failure_tag]}
 
 
 def test_drop_inside_if_changes_cardinality(spark):

@@ -400,14 +400,20 @@ class TestLsclRunStream:
         n2 = spark.read.parquet(out).count()
         assert n1 == n2 > 0
 
-    def test_streaming_pipeline_output_rejected(self, spark, tmp_path):
+    @pytest.mark.parametrize("output", [
+        'pipeline { send_to => ["x"] }',
+        # nested in a conditional: still an in-plan bus registration
+        'if [message] == "1" { pipeline { send_to => ["x"] } }',
+    ], ids=["top_level", "nested_in_if"])
+    def test_streaming_pipeline_output_rejected(self, spark, tmp_path,
+                                                output):
         from logstash_spark.plans.lscl import compile_lscl_job
 
         import pytest as _pytest
 
         job = compile_lscl_job(
             'input { file { path => "/nonexistent" } } '
-            'output { pipeline { send_to => ["x"] } }')
+            f'output {{ {output} }}')
         with _pytest.raises(SyntaxError, match="durable bus"):
             job.run_stream(spark, checkpoint_dir=str(tmp_path / "c"))
 
@@ -682,17 +688,25 @@ def test_kafka_binary_codec_dispatch(spark):
         assert {"fluent_tag", "fluent_time", "record"} <= set(src.columns)
 
 
-def test_run_stream_rejects_batch_only_stateful(spark, tmp_path):
+@pytest.mark.parametrize("plugin, twin", [
+    ('throttle { key => "%{k}" period => 60 after_count => 1 }',
+     "throttle_stream"),
+    ('elapsed { unique_id_field => "k" start_tag => "s" end_tag => "e" }',
+     "elapsed_stream_join"),
+    ('aggregate { task_id => "%{k}" }', "session_rollup_stream"),
+    ('metrics { meter => "%{k}" }', r"jobs\.rollup_stream"),
+], ids=["throttle", "elapsed", "aggregate", "metrics"])
+def test_run_stream_rejects_batch_only_stateful(spark, tmp_path, plugin, twin):
     from logstash_spark.plans.lscl import compile_lscl_job
 
-    job = compile_lscl_job("""
-    input { file { path => "/nonexistent" } }
-    filter {
-      if [x] == 1 { throttle { key => "%{k}" period => 60 after_count => 1 } }
-    }
-    output { null {} }
+    job = compile_lscl_job(f"""
+    input {{ file {{ path => "/nonexistent" }} }}
+    filter {{
+      if [x] == 1 {{ {plugin} }}
+    }}
+    output {{ null {{}} }}
     """)
-    with pytest.raises(SyntaxError, match="throttle_stream"):
+    with pytest.raises(SyntaxError, match=twin):
         job.run_stream(spark, checkpoint_dir=str(tmp_path / "c"))
 
 
